@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Io
 
 /** Above-sf0.1 correctness envelope for the dedup/ANN families whose
   * DuckDB oracle is corpus-quadratic ON THE ORACLE SIDE (banding
@@ -141,7 +142,7 @@ object ScaleInvariants {
     }
 
     // ---- t11: component labels are the min member id -----------------
-    val comp = spark.read.parquet(
+    val comp = Io.parquet(spark,
       s"${ops.TextOps.textDupIndex(spark, dir)}/comp")
     check("inv_t11_label_is_min") {
       val badLabel = comp.groupBy("comp").agg(min(col("id")).as("mn"))

@@ -1,5 +1,7 @@
 package graft
 
+import graft.io.Io
+
 /** Dev harness for the scale-posture experiment: time the index builds
   * and the heavy corpus-wide queries on an ARBITRARY dataset dir — in
   * particular a perturbed N× replica of sf0.1 (devtools/scalegen.py) —
@@ -96,7 +98,7 @@ object ScaleProbe {
     if (mode == "skew") {
       val tmp = java.nio.file.Files.createTempDirectory("graft-skew-ds").toString
       import org.apache.spark.sql.functions.{col, concat, lit, when}
-      spark.read.parquet(s"$dir/documents.parquet")
+      Io.parquet(spark, s"$dir/documents.parquet")
         .select(col("doc_id"),
           concat(col("text"), lit(" zzhot")).as("text"), col("lang"),
           when(col("doc_id") % 10 =!= 0, lit("srcHot"))
@@ -234,7 +236,7 @@ object ScaleProbe {
     // fixed-size batches: 200 docs (half exact copies, half perturbed),
     // 40 vectors (small enough that bandBits stays put at the 1x corpus
     // — a geometry flip would measure a full rebuild, not an append)
-    val docs = spark.read.parquet(s"$tmpDs/documents.parquet")
+    val docs = Io.parquet(spark, s"$tmpDs/documents.parquet")
     val maxId = docs.agg(max("doc_id")).head.getLong(0)
     docs.filter(col("doc_id") < 200)
       .select((col("doc_id") + maxId + 1).as("doc_id"),
@@ -243,9 +245,9 @@ object ScaleProbe {
         col("lang"), col("source"), col("n_chars"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("append").parquet(s"$tmpDs/documents.parquet")
-    val batchDocs = spark.read.parquet(s"$tmpDs/documents.parquet")
+    val batchDocs = Io.parquet(spark, s"$tmpDs/documents.parquet")
       .filter(col("doc_id") > maxId)
-    val emb = spark.read.parquet(s"$tmpDs/embeddings.parquet")
+    val emb = Io.parquet(spark, s"$tmpDs/embeddings.parquet")
     val maxV = emb.agg(max("vec_id")).head.getLong(0)
     emb.filter(col("vec_id") < 40)
       .select((col("vec_id") + maxV + 1).as("vec_id"),
@@ -253,7 +255,7 @@ object ScaleProbe {
           .otherwise(reverse(col("embedding"))).as("embedding"),
         col("label"))
       .write.mode("append").parquet(s"$tmpDs/embeddings.parquet")
-    val batchVec = spark.read.parquet(s"$tmpDs/embeddings.parquet")
+    val batchVec = Io.parquet(spark, s"$tmpDs/embeddings.parquet")
       .filter(col("vec_id") > maxV)
     // per-OUTPUT accounting (r13): an append whose wall time grows with
     // scale is only judgeable next to its emitted-pair count — at 100×
@@ -263,7 +265,7 @@ object ScaleProbe {
     // result-sized, so the counts are cheap scans.
     def pairCount(table: String): Double =
       ops.Warehouse.latest(table, tmpDs)
-        .map(p => spark.read.parquet(s"$p/pairs").count().toDouble)
+        .map(p => Io.parquet(spark, s"$p/pairs").count().toDouble)
         .getOrElse(-1.0)
     val tdPre = if (text) pairCount("textdup") else -1.0
     val ndPre = if (vec) pairCount("neardup") else -1.0

@@ -13,6 +13,9 @@ import org.apache.spark.sql.SparkSession
   * - AQE on with a modest advisory size: at 100 TB AQE coalesces shuffle
   *   partitions and re-plans skew joins; at test scale it keeps tiny
   *   shuffles from fragmenting into thousands of empty tasks.
+  * - `fs.file.impl`: [[graft.io.NioLocalFileSystem]], Hadoop's local
+  *   filesystem with permissions set through NIO instead of a forked
+  *   `chmod` per created file and directory.
   */
 object Sessions {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -26,6 +29,7 @@ object Sessions {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
 
   /** Local session sized from SPARK_GRAFT_CPUS (driver contract). */
   def local(): SparkSession = {

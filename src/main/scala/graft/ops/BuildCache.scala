@@ -39,8 +39,9 @@ final class BuildCache[T] {
 object BuildCache {
   /** Version marker of `<d>/<file>`: newest last-modified millis plus
     * total byte size (one level deep for a directory of part files).
-    * Unreadable paths mark as "0:0" — the build then fails identically
-    * on every attempt, so caching it loses nothing. */
+    * An unreadable source throws: a constant marker for every failure
+    * would key one stale artifact as the answer for any source that
+    * cannot be read. */
   def version(d: String, file: String): String = {
     import java.nio.file.{Files, Paths}
     val p = Paths.get(d, file)
@@ -53,6 +54,8 @@ object BuildCache {
         val sz = children.filter(Files.isRegularFile(_)).map(Files.size(_)).sum
         s"$mt:$sz"
       } else s"${Files.getLastModifiedTime(p).toMillis}:${Files.size(p)}"
-    } catch { case scala.util.control.NonFatal(_) => "0:0" }
+    } catch { case e: java.io.IOException =>
+      throw new java.io.UncheckedIOException(s"cannot version build source $p", e)
+    }
   }
 }

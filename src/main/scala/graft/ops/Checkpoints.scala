@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import graft.io.Io
 
 /** Lifecycle helpers for iterative-loop checkpoints.
   *
@@ -48,7 +49,7 @@ object Checkpoints {
   def materialize(df: DataFrame, prefix: String = "graft-mat"): DataFrame = {
     val dir = scopedTempDir(prefix).toString
     df.write.mode("overwrite").parquet(dir)
-    df.sparkSession.read.parquet(dir)
+    Io.parquet(df.sparkSession, dir)
   }
 
   /** Temp table directory that is removed at JVM exit: repeated loop

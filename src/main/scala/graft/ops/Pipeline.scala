@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.io.Io
 
 /** The reference's end-to-end dataflow (SURVEY.md §3.1,
   * pipeline.py:128-187) composed from the engine's operators into one
@@ -176,7 +177,7 @@ object Pipeline {
       cacheDir)
     // tile_id is a partition column in the cache layout; read-back
     // type inference narrows it, so restore the long key
-    val cached = spark.read.parquet(cacheDir)
+    val cached = Io.parquet(spark, cacheDir)
       .select(col("tile_id").cast("long"), col("time"), col("date"),
         col("y"), col("x"), col("ndvi_c"), col("evi_c"))
     val r = fromGated(cached)
@@ -228,7 +229,7 @@ object Pipeline {
           Option(m.getString(1)).getOrElse("0000-00-00"))
       }
     }
-    s.read.parquet(s"$path/cube")
+    Io.parquet(s, s"$path/cube")
   }
 
   private def writeCubeMeta(s: SparkSession, dir: String,
@@ -256,7 +257,7 @@ object Pipeline {
   def appendToCube(s: SparkSession, d: String, appendedRaw: DataFrame): Unit = {
     val priorMeta = Warehouse.latest("cube", d).flatMap { prior =>
       scala.util.Try {
-        val m = s.read.parquet(s"$prior/meta")
+        val m = Io.parquet(s, s"$prior/meta")
           .select("n_scenes", "max_date").head()
         (prior, m.getLong(0), m.getString(1))
       }.toOption
@@ -376,7 +377,7 @@ object Pipeline {
         writeGcacheMeta(s, tmp.toString, Option(maxDate).getOrElse("0000-00-00"))
       }
     }
-    s.read.parquet(s"$path/cache")
+    Io.parquet(s, s"$path/cache")
       .select(col("tile_id").cast("long"), col("time"), col("date"),
         col("y"), col("x"), col("ndvi_c"), col("evi_c"))
   }
@@ -403,7 +404,7 @@ object Pipeline {
       batchRaw: DataFrame): Unit = {
     val priorMeta = Warehouse.latest("gcache", d).flatMap { prior =>
       scala.util.Try(
-        s.read.parquet(s"$prior/meta").select("max_date").head().getString(0)
+        Io.parquet(s, s"$prior/meta").select("max_date").head().getString(0)
       ).toOption.map(maxDate => (prior, maxDate))
     }
     priorMeta match {

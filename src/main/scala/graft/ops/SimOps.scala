@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.Num._
+import graft.io.Io
 
 /** Similarity search over the `embeddings` table (`array<float>`, dim 64;
   * SURVEY.md §2.11 ext_sim_topk): brute-force cosine top-k as the
@@ -279,6 +280,14 @@ object SimOps {
     * the one-pass cell ASSIGNMENT (and the serve path) remain linear. */
   val TrainSampleTarget = 2048L
 
+  /** The seed rule found none of vectors `seedLo .. seedLo+k-1` in the
+    * corpus (e.g. a replica whose ids skip that range), so there is no
+    * quantizer to train: a named failure instead of an index error deep
+    * in the assignment, and instead of an index with no cells. */
+  final class MissingSeedVectors(seedLo: Int, k: Int) extends IllegalStateException(
+    s"IVF training needs at least one seed vector (vec_id $seedLo..${seedLo + k - 1}); " +
+      "the corpus has none")
+
   /** Modular sampling stride for a corpus of `nVec` vectors. */
   private[graft] def trainStride(nVec: Long): Long =
     math.max(1L, nVec / TrainSampleTarget)
@@ -354,6 +363,9 @@ object SimOps {
       f.filter(col("vec_id").between(seedLo, seedLo + k - 1))
         .select(col("vec_id").as("cell"), col("i"), col("v").as("c"))
         .as[(Long, Long, Double)].collect()
+    // with no seed vector the model has no cell, and the assignment's
+    // argmax would index an empty candidate array
+    if (centRows.isEmpty) throw new MissingSeedVectors(seedLo, k)
     for (it <- 1 to iters) Prof.tt("ivf")(s"round-$it") {
       // winners is sample-sized (≤ TrainSampleTarget + k rows) — safe
       // to broadcast at any corpus scale by construction
@@ -506,7 +518,7 @@ object SimOps {
         } finally Checkpoints.release(fPin)
       }
       import s.implicits._
-      s.read.parquet(path).select("cell", "i", "c")
+      Io.parquet(s, path).select("cell", "i", "c")
         .as[(Long, Long, Double)].collect()
     }
 
@@ -566,7 +578,7 @@ object SimOps {
       }
     }
     // partition-column type inference narrows cell to int; restore long
-    s.read.parquet(s"$path/cells").withColumn("cell", col("cell").cast("long"))
+    Io.parquet(s, s"$path/cells").withColumn("cell", col("cell").cast("long"))
   }
 
   /** [[ivfIndex]] at an EXPLICIT quantizer size — the geometry knob a
@@ -597,7 +609,7 @@ object SimOps {
         writeIvfMeta(s, tmp.toString, nVec, nVec)
       }
     }
-    s.read.parquet(s"$path/cells").withColumn("cell", col("cell").cast("long"))
+    Io.parquet(s, s"$path/cells").withColumn("cell", col("cell").cast("long"))
   }
 
   /** `meta/` table of the IVF artifact: the corpus size and the size of
@@ -671,7 +683,7 @@ object SimOps {
   def appendToIvf(s: SparkSession, d: String, appended: DataFrame): Unit = {
     val priorMeta = Warehouse.latest("ivf", d).flatMap { prior =>
       scala.util.Try {
-        val m = s.read.parquet(s"$prior/meta")
+        val m = Io.parquet(s, s"$prior/meta")
           .select("n_vectors", "trained_n").head()
         (prior, m.getLong(0), m.getLong(1))
       }.toOption
@@ -1499,7 +1511,7 @@ object SimOps {
           bucketed.repartitionByRange(col("band"), col("key"))
             .sortWithinPartitions("band", "key"),
           s"$tmp/members"))
-        val sizes = s.read.parquet(s"$tmp/sizes")
+        val sizes = Io.parquet(s, s"$tmp/sizes")
         tt("audit")(Warehouse.writeParquet(
           sizes.filter(col("n_members") > MaxNearDupBucket)
             .select("band", "key", "n_members"),
@@ -1514,7 +1526,7 @@ object SimOps {
           // list covers all future survival witnesses)
           tt("pairbk")(Warehouse.writeParquet(
             exp.select("band", "key", "keep_id", "dup_id")
-              .join(s.read.parquet(s"$tmp/pairs").select("keep_id", "dup_id"),
+              .join(Io.parquet(s, s"$tmp/pairs").select("keep_id", "dup_id"),
                 Seq("keep_id", "dup_id"), "left_semi"),
             s"$tmp/pairbk"))
         } finally Checkpoints.release(ePin)
@@ -1565,7 +1577,7 @@ object SimOps {
   def appendToNearDup(s: SparkSession, d: String, appended: DataFrame): Unit = {
     val priorMeta = Warehouse.latest("neardup", d).flatMap { prior =>
       scala.util.Try {
-        val m = s.read.parquet(s"$prior/meta")
+        val m = Io.parquet(s, s"$prior/meta")
           .select("n_vectors", "bits").head()
         (prior, m.getLong(0), m.getInt(1))
       }.toOption
@@ -1619,7 +1631,7 @@ object SimOps {
       // pattern): broadcast-left-join the batch counts over the
       // persisted census, union the brand-new buckets (batch keys
       // minus the batch-key-sized matched set)
-      val priorSizes = s.read.parquet(s"$prior/sizes")
+      val priorSizes = Io.parquet(s, s"$prior/sizes")
       val grown = priorSizes.join(broadcast(bc), Seq("band", "key"), "left")
         .select(col("band"), col("key"),
           (col("n_members") + coalesce(col("b_n"), lit(0L))).as("n_members"))
@@ -1630,12 +1642,12 @@ object SimOps {
         .select(col("band"), col("key"), col("b_n").as("n_members"))
       tt("sizes")(Warehouse.writeParquet(
         grown.unionByName(freshBuckets), s"$tmp/sizes"))
-      val sizes = s.read.parquet(s"$tmp/sizes")
+      val sizes = Io.parquet(s, s"$tmp/sizes")
       tt("audit")(Warehouse.writeParquet(
         sizes.filter(col("n_members") > MaxNearDupBucket)
           .select("band", "key", "n_members"),
         s"$tmp/audit"))
-      val audit = s.read.parquet(s"$tmp/audit").select("band", "key")
+      val audit = Io.parquet(s, s"$tmp/audit").select("band", "key")
       // Mining: a new pair always involves an appended vector, and
       // every bucket containing one is batch-hit — the corpus side
       // needs the members of batch-hit under-cap buckets ONLY. The key
@@ -1665,7 +1677,7 @@ object SimOps {
       if (batchKeys.length > MaxBatchKeys) sys.error(
         s"appendToNearDup: batch hits ${batchKeys.length} distinct bucket " +
           s"keys, over the $MaxBatchKeys isin budget — rebuilding")
-      val priorMembers = s.read.parquet(s"$prior/members")
+      val priorMembers = Io.parquet(s, s"$prior/members")
       val (members, mPin) = tt("pin-members")(Checkpoints.pin(
         priorMembers.filter(col("key").isin(batchKeys.toSeq: _*))
           .join(broadcast(hitKeys), Seq("band", "key"), "left_semi")
@@ -1709,15 +1721,15 @@ object SimOps {
         // under cap (appends only grow buckets, so the mine-time
         // `pairbk/` list covers every possible survival witness);
         // pair-table-sized, no corpus membership re-derivation
-        val priorPairs = s.read.parquet(s"$prior/pairs")
-        val priorPairbk = s.read.parquet(s"$prior/pairbk")
+        val priorPairs = Io.parquet(s, s"$prior/pairs")
+        val priorPairbk = Io.parquet(s, s"$prior/pairbk")
         val aliveBk = priorPairbk.join(audit, Seq("band", "key"), "left_anti")
         val surviving = priorPairs.join(
           aliveBk.select("keep_id", "dup_id").dropDuplicates("keep_id", "dup_id"),
           Seq("keep_id", "dup_id"), "left_semi")
         tt("pairs")(Warehouse.writeParquet(
           surviving.unionByName(newPairs), s"$tmp/pairs"))
-        val pairs = s.read.parquet(s"$tmp/pairs")
+        val pairs = Io.parquet(s, s"$tmp/pairs")
         tt("pairbk")(Warehouse.writeParquet(
           priorPairbk.join(pairs.select("keep_id", "dup_id"),
               Seq("keep_id", "dup_id"), "left_semi")
@@ -1770,7 +1782,7 @@ object SimOps {
     * round-trips (long, long, double, boolean) exactly, so the hash is
     * identical to the live lineage. */
   val embedNearDup: Q = (s, d) =>
-    s.read.parquet(s"${nearDupIndex(s, d)}/pairs")
+    Io.parquet(s, s"${nearDupIndex(s, d)}/pairs")
       .orderBy("keep_id", "dup_id")
 
   /** Oracle CTEs shared by v06 and the v12 audit: the banded sign-key
@@ -1842,7 +1854,7 @@ object SimOps {
     * the materialized [[nearDupIndex]] pair table: one distinct + one
     * anti-join past an artifact SCAN, no lineage re-derivation. */
   val embedKeep: Q = (s, d) => {
-    val drops = s.read.parquet(s"${nearDupIndex(s, d)}/pairs")
+    val drops = Io.parquet(s, s"${nearDupIndex(s, d)}/pairs")
       .select(col("dup_id").as("vec_id")).distinct()
     Tables.embeddings(s, d).select("vec_id", "label")
       .join(drops, Seq("vec_id"), "left_anti")
@@ -1867,7 +1879,7 @@ object SimOps {
     * the materialized [[nearDupIndex]] audit table (schema-bearing
     * even when empty — Warehouse.writeParquet). */
   val embedBucketAudit: Q = (s, d) =>
-    s.read.parquet(s"${nearDupIndex(s, d)}/audit")
+    Io.parquet(s, s"${nearDupIndex(s, d)}/audit")
       .orderBy("band", "key")
 
   val embedBucketAuditSql: String =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.Num._
+import graft.io.Io
 
 /** Training-data text pipeline operators over `documents` (SURVEY.md §2.11
   * north-star set): exact + near dedup (MinHash/LSH, SimHash, n-gram
@@ -287,7 +288,7 @@ object TextOps {
           tmp.toString)
       }
     }
-    s.read.parquet(path)
+    Io.parquet(s, path)
   }
 
   /** Explicit build step (the dedup CREATE INDEX analog); queries build
@@ -496,7 +497,7 @@ object TextOps {
     * Serves from the [[textDupIndex]] pair artifact — the mining ran at
     * build time, once per corpus version. */
   val dedupMinhash: Q = (s, d) =>
-    s.read.parquet(s"${textDupIndex(s, d)}/pairs")
+    Io.parquet(s, s"${textDupIndex(s, d)}/pairs")
       .orderBy("doc_a", "doc_b")
 
   // ------------------------------------------------- textdup manifest
@@ -803,7 +804,7 @@ object TextOps {
           exp.select("band", "key", "doc_a", "doc_b"), s"$tmp/pairbk"))
       } finally Checkpoints.release(ePin)
     } finally Checkpoints.release(bPin)
-    val pairs = s.read.parquet(s"$tmp/pairs")
+    val pairs = Io.parquet(s, s"$tmp/pairs")
     // exact-content fast path first (see [[fingerprintTagged]]):
     // byte-identical pairs decide in-row; only the genuinely-near
     // remainder shingles + intersects. The tag pins because both
@@ -861,7 +862,7 @@ object TextOps {
     * delta optimization. */
   private def readEpoch(s: SparkSession, path: String,
       table: String): Option[String] =
-    try Some(s.read.parquet(s"$path/$table").head().getString(0))
+    try Some(Io.parquet(s, s"$path/$table").head().getString(0))
     catch { case scala.util.control.NonFatal(e) =>
       if (java.nio.file.Files.isDirectory(
           java.nio.file.Paths.get(path, table))) {
@@ -971,7 +972,7 @@ object TextOps {
       // batch keys minus the (batch-key-sized) matched set — a
       // full_outer here would shuffle the whole O(buckets) table per
       // append
-      val priorSizes = s.read.parquet(s"$prior/sizes")
+      val priorSizes = Io.parquet(s, s"$prior/sizes")
       val grown = priorSizes.join(broadcast(bc), Seq("band", "key"), "left")
         .select(col("band"), col("key"),
           (col("n_members") + coalesce(col("b_n"), lit(0L))).as("n_members"))
@@ -981,10 +982,10 @@ object TextOps {
       val freshBuckets = bc.join(matched, Seq("band", "key"), "left_anti")
         .select(col("band"), col("key"), col("b_n").as("n_members"))
       tt("sizes")(Warehouse.writeParquet(grown.unionByName(freshBuckets), s"$tmp/sizes"))
-      val sizes = s.read.parquet(s"$tmp/sizes")
+      val sizes = Io.parquet(s, s"$tmp/sizes")
       tt("audit")(Warehouse.writeParquet(
         sizes.filter(col("n_members") > MaxBucketMembers), s"$tmp/audit"))
-      val audit = s.read.parquet(s"$tmp/audit").select("band", "key")
+      val audit = Io.parquet(s, s"$tmp/audit").select("band", "key")
       // Mining: a new pair always involves an appended doc, and every
       // bucket containing an appended doc is batch-hit — so the corpus
       // side needs the members of batch-hit under-cap buckets ONLY.
@@ -1029,8 +1030,8 @@ object TextOps {
         // batch rows are written — a result-sized union-rewrite here was
         // the dominant term of the 10× append probe) and the
         // row-filtering slow path.
-        val priorPairs = s.read.parquet(s"$prior/pairs")
-        val priorPairbk = s.read.parquet(s"$prior/pairbk")
+        val priorPairs = Io.parquet(s, s"$prior/pairs")
+        val priorPairbk = Io.parquet(s, s"$prior/pairbk")
         val newlyCrossed = priorSizes.join(broadcast(bc), Seq("band", "key"))
           .filter(col("n_members") <= MaxBucketMembers &&
             col("n_members") + col("b_n") > MaxBucketMembers)
@@ -1059,13 +1060,13 @@ object TextOps {
             Seq("doc_a", "doc_b"), "left_semi")
           tt("pairs")(Warehouse.writeParquet(surviving.unionByName(newPairs), s"$tmp/pairs"))
           tt("pairbk")(Warehouse.writeParquet(
-            priorPairbk.join(s.read.parquet(s"$tmp/pairs").select("doc_a", "doc_b"),
+            priorPairbk.join(Io.parquet(s, s"$tmp/pairs").select("doc_a", "doc_b"),
                 Seq("doc_a", "doc_b"), "left_semi")
               .unionByName(exp.select("band", "key", "doc_a", "doc_b")
                 .dropDuplicates("band", "key", "doc_a", "doc_b")),
             s"$tmp/pairbk"))
         }
-        val pairs = s.read.parquet(s"$tmp/pairs")
+        val pairs = Io.parquet(s, s"$tmp/pairs")
         // verified Jaccards carry for surviving pairs (shingle sets are
         // per-doc); only the fresh pairs verify. The fresh set IS
         // newPairs — every prior pair was verified at its own mine time
@@ -1093,11 +1094,11 @@ object TextOps {
             newNear.write.mode("append").parquet(s"$tmp/nearpairs")
           }
         } else {
-          val survVerify = s.read.parquet(s"$prior/verify")
+          val survVerify = Io.parquet(s, s"$prior/verify")
             .join(pairs.select("doc_a", "doc_b").hint("shuffle_hash"),
               Seq("doc_a", "doc_b"), "left_semi")
           tt("verify")(Warehouse.writeParquet(survVerify.unionByName(newVerify), s"$tmp/verify"))
-          val survNear = s.read.parquet(s"$prior/nearpairs")
+          val survNear = Io.parquet(s, s"$prior/nearpairs")
             .join(pairs.select("doc_a", "doc_b").hint("shuffle_hash"),
               Seq("doc_a", "doc_b"), "left_semi")
           tt("nearpairs")(Warehouse.writeParquet(survNear.unionByName(newNear), s"$tmp/nearpairs"))
@@ -1110,7 +1111,7 @@ object TextOps {
         // last corpus-growing term in the append).
         val newEdges = newPairs.filter(col("est_jaccard") >= 0.5)
         tt("comp") {
-          val priorC = s.read.parquet(s"$prior/comp")
+          val priorC = Io.parquet(s, s"$prior/comp")
           val comp =
             if (!anyCross)
               // no prior edge died: pure-add delta — merge components
@@ -1215,8 +1216,8 @@ object TextOps {
       appended: DataFrame, prior: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     Warehouse.getOrBuild("funnel", d, "documents.parquet") { tmp =>
-      val priorStages = s.read.parquet(s"$prior/stages")
-      val priorHashes = s.read.parquet(s"$prior/hashes")
+      val priorStages = Io.parquet(s, s"$prior/stages")
+      val priorHashes = Io.parquet(s, s"$prior/hashes")
       val priorMax = priorHashes.agg(max("doc_id")).head().getLong(0)
       val batchMin = appended.agg(min("doc_id")).head().getLong(0)
       require(batchMin > priorMax,
@@ -1266,7 +1267,7 @@ object TextOps {
       val tdPath = textDupIndex(s, d)
       // stage 2 only ever needs the genuinely-near subset (byte-identical
       // pairs can't drop an exact-dedup survivor — see [[nearPairs]])
-      val pairs = s.read.parquet(s"$tdPath/nearpairs")
+      val pairs = Io.parquet(s, s"$tdPath/nearpairs")
       val tdEpoch = readEpoch(s, tdPath, "epoch")
       val k2 =
         if (tdEpoch.isDefined &&
@@ -1407,7 +1408,7 @@ object TextOps {
     * re-scanned the corpus per run before r10; the serve path is one
     * map-side-combined aggregate over the ~8-byte-per-doc artifact. */
   val dedupSimhash: Q = (s, d) =>
-    s.read.parquet(s"${textDupIndex(s, d)}/simhash")
+    Io.parquet(s, s"${textDupIndex(s, d)}/simhash")
       .groupBy("simhash")
       .agg(count(lit(1)).as("n_docs"), min("doc_id").as("first_doc"))
       .filter(col("n_docs") > 1)
@@ -1537,7 +1538,7 @@ object TextOps {
     * the full-pair form) while shrinking the stage-2 input by the
     * exact-replica pair mass that dominates any real corpus. */
   private[graft] def nearPairs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${textDupIndex(s, d)}/nearpairs")
+    Io.parquet(s, s"${textDupIndex(s, d)}/nearpairs")
 
   /** Test hook: the pre-fast-path verify form — EVERY candidate pair
     * pays the shingle intersection. The equivalence reference the fast
@@ -1576,7 +1577,7 @@ object TextOps {
     * LSH-candidates → exact-verify pipeline shape). Serves from the
     * [[textDupIndex]] verify artifact. */
   val ngramJaccard: Q = (s, d) =>
-    s.read.parquet(s"${textDupIndex(s, d)}/verify")
+    Io.parquet(s, s"${textDupIndex(s, d)}/verify")
       .orderBy("doc_a", "doc_b")
 
   val ngramJaccardSql: String = {
@@ -1986,7 +1987,7 @@ object TextOps {
     * the iterative CC ran once at build time; the serve path is a
     * label-table-sized aggregation over the artifact scan. */
   val dedupComponents: Q = (s, d) =>
-    s.read.parquet(s"${textDupIndex(s, d)}/comp").groupBy("comp")
+    Io.parquet(s, s"${textDupIndex(s, d)}/comp").groupBy("comp")
       .agg(count(lit(1)).as("n_members"),
         concat_ws("+", array_sort(collect_list(col("id").cast("string"))))
           .as("members"))
@@ -2051,7 +2052,7 @@ object TextOps {
     * keeper assignment downstream. */
   val componentAudit: Q = (s, d) =>
     oversizedComponents(
-        s.read.parquet(s"${textDupIndex(s, d)}/comp"), MaxComponentMembers)
+        Io.parquet(s, s"${textDupIndex(s, d)}/comp"), MaxComponentMembers)
       .select(col("comp").as("comp_id"), col("n_members"))
       .orderBy("comp_id")
 
@@ -2107,7 +2108,7 @@ object TextOps {
     * is itself oracle-checked, so a cap or key-distribution regression
     * surfaces as data in the audit, not as a silent executor OOM. */
   val bucketAudit: Q = (s, d) =>
-    s.read.parquet(s"${textDupIndex(s, d)}/audit")
+    Io.parquet(s, s"${textDupIndex(s, d)}/audit")
       .orderBy("band", "key")
 
   val bucketAuditSql: String = {
@@ -2631,7 +2632,7 @@ object TextOps {
           .foreach(writeEpoch(s, tmp.toString, "pairsepoch", _))
       }
     }
-    s.read.parquet(s"$path/stages")
+    Io.parquet(s, s"$path/stages")
   }
 
   /** Explicit build step (the curation CREATE INDEX analog); queries
@@ -2863,7 +2864,7 @@ object TextOps {
             .sortWithinPartitions("w"), s"$tmp/post")
           Warehouse.writeParquet(
             tkg.groupBy("w").agg(sum("mult").as("c")), s"$tmp/counts")
-          val klass = tokenKlass(s.read.parquet(s"$tmp/counts"))
+          val klass = tokenKlass(Io.parquet(s, s"$tmp/counts"))
           Warehouse.writeParquet(
             tkg.join(klass.hint("shuffle_hash"), "w")
               .groupBy("doc_id")
@@ -2878,13 +2879,13 @@ object TextOps {
     * the live lineage at any correction depth. */
   private def freqScores(s: SparkSession, d: String): DataFrame = {
     val idx = freqIndex(s, d)
-    val base = s.read.parquet(s"$idx/scores")
+    val base = Io.parquet(s, s"$idx/scores")
     val corrDir = java.nio.file.Paths.get(idx, "corr")
     val summed =
       if (java.nio.file.Files.isDirectory(corrDir)) {
         // corrections are bounded (appendToFreqIncremental compacts by
         // full rebuild past CorrCap), so this join broadcasts under AQE
-        val corr = s.read.parquet(corrDir.toString)
+        val corr = Io.parquet(s, corrDir.toString)
           .groupBy("doc_id").agg(sum("dsum").as("dsum"))
         base.join(corr, Seq("doc_id"), "left")
           .select(col("doc_id"),
@@ -2972,7 +2973,7 @@ object TextOps {
           .groupBy("w", "doc_id").agg(count(lit(1)).as("mult")))
       try {
         val bc = btg.groupBy("w").agg(sum("mult").as("b_c"))
-        val priorCounts = s.read.parquet(s"$prior/counts")
+        val priorCounts = Io.parquet(s, s"$prior/counts")
         // batch-hit tokens whose class (count bit-length) grew, with
         // the integer class delta — driver-collected (bounded by the
         // batch vocabulary and capped) so the postings probe below can
@@ -3002,7 +3003,7 @@ object TextOps {
           // bound below, so the (common) no-crossing append never pays
           // this job
           val priorCorrRows =
-            if (hasPriorCorr) s.read.parquet(priorCorr.toString).count()
+            if (hasPriorCorr) Io.parquet(s, priorCorr.toString).count()
             else 0L
           // reprice ONLY the prior docs containing a crossed token:
           // the isin pushdown prunes the token-sorted postings to the
@@ -3010,14 +3011,14 @@ object TextOps {
           val words = crossed.map(_.getString(0)).toSeq
           val dkDf = crossed.map(r => (r.getString(0), r.getInt(1).toLong))
             .toSeq.toDF("w", "dk")
-          val corr = s.read.parquet(s"$prior/post")
+          val corr = Io.parquet(s, s"$prior/post")
             .filter(col("w").isin(words: _*))
             .join(broadcast(dkDf), "w")
             .groupBy("doc_id").agg(sum(col("mult") * col("dk")).as("dsum"))
             .persist()
           try {
             val affected = corr.count()
-            val priorDocs = s.read.parquet(s"$prior/scores").count()
+            val priorDocs = Io.parquet(s, s"$prior/scores").count()
             require(priorCorrRows + affected <=
               math.max(CorrCapRows, priorDocs / 20),
               "pending corrections past the serve bound — compact via rebuild")
@@ -3027,7 +3028,7 @@ object TextOps {
         // only the batch docs score fresh, against the batch-vocabulary
         // slice of the merged census (post-crossing classes, so no
         // correction rows apply to them)
-        val batchKlass = tokenKlass(s.read.parquet(s"$tmp/counts")
+        val batchKlass = tokenKlass(Io.parquet(s, s"$tmp/counts")
           .join(broadcast(bc.select("w")), Seq("w"), "left_semi"))
         btg.join(batchKlass, "w")
           .groupBy("doc_id")
@@ -3325,7 +3326,7 @@ object TextOps {
           .write.mode("append").parquet(s"$tmp/tf")
         val bdf = btf.filter(col("term").isNotNull)
           .groupBy("term").agg(count(lit(1)).as("b_df"))
-        val priorDf = s.read.parquet(s"$prior/df")
+        val priorDf = Io.parquet(s, s"$prior/df")
         val grown = priorDf.join(broadcast(bdf), Seq("term"), "left")
           .select(col("term"),
             (col("df") + coalesce(col("b_df"), lit(0L))).as("df"))
@@ -3335,7 +3336,7 @@ object TextOps {
         val freshT = bdf.join(matched, Seq("term"), "left_anti")
           .select(col("term"), col("b_df").as("df"))
         Warehouse.writeParquet(grown.unionByName(freshT), s"$tmp/df")
-        val nPrior = s.read.parquet(s"$prior/meta").head().getLong(0)
+        val nPrior = Io.parquet(s, s"$prior/meta").head().getLong(0)
         val nBatch = btf.select("doc_id").distinct().count()
         Warehouse.writeParquet(
           Seq(nPrior + nBatch).toDF("n_docs"), s"$tmp/meta")
@@ -3372,9 +3373,9 @@ object TextOps {
   val docKeywords: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     val idx = keywordsIndex(s, d)
-    val tf = s.read.parquet(s"$idx/tf")
-    val dfRel = s.read.parquet(s"$idx/df")
-    val n = s.read.parquet(s"$idx/meta").head().getLong(0)
+    val tf = Io.parquet(s, s"$idx/tf")
+    val dfRel = Io.parquet(s, s"$idx/df")
+    val n = Io.parquet(s, s"$idx/meta").head().getLong(0)
     val w = Window.partitionBy("doc_id")
       .orderBy(col("tf").desc, col("df").asc, col("term").asc)
     tf.join(dfRel.hint("shuffle_hash"), "term")

@@ -3,6 +3,7 @@ package graft.ops
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import graft.io.Io
 
 /** Stable on-disk warehouse for per-corpus build artifacts — the
   * signature table, funnel membership, k-means model, IVF inverted
@@ -468,7 +469,7 @@ object Warehouse {
     * and the staged compaction paths so both land identical layouts. */
   private def compacted(s: SparkSession, dir: Path, target: Int,
       sortCols: Seq[String]): DataFrame = {
-    val df = s.read.parquet(dir.toString)
+    val df = Io.parquet(s, dir.toString)
     if (sortCols.nonEmpty)
       df.repartitionByRange(target, sortCols.map(col): _*)
         .sortWithinPartitions(sortCols.head, sortCols.tail: _*)

@@ -62,7 +62,9 @@ class BuildCacheSpec extends AnyFunSuite {
     java.nio.file.Files.write(d2.resolve("part-0"), "p0".getBytes)
     val vd = BuildCache.version(dir.toString, "table.parquet")
     assert(vd != "0:0")
-    // missing datasets mark as the sentinel instead of throwing
-    assert(BuildCache.version(dir.toString, "nope.parquet") == "0:0")
+    // a missing source fails loudly rather than keying as a constant
+    intercept[java.io.UncheckedIOException] {
+      BuildCache.version(dir.toString, "nope.parquet")
+    }
   }
 }

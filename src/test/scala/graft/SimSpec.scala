@@ -467,6 +467,35 @@ class SimSpec extends SparkSpecBase {
     }
   }
 
+  test("IVF builds on a corpus without seed vectors fail with a named error") {
+    // the shape of an 8x scalegen replica of a 100-vector base: ids
+    // 0..99 plus offsets of 5000, so no vec_id falls in the seed range
+    val ds = java.nio.file.Files.createTempDirectory("graft-ivf-noseed").toString
+    val base = Tables.embeddings(spark, sf).filter(col("vec_id") < 100)
+    (0 until 8).map(j => base.withColumn("vec_id", col("vec_id") + lit(j * 5000L)))
+      .reduce(_ unionByName _)
+      .write.mode("overwrite").parquet(s"$ds/embeddings.parquet")
+    try {
+      val builds: Seq[(String, () => Unit)] = Seq(
+        "ivf" -> (() => SimOps.buildIvf(spark, ds)),
+        "ivfauto" -> (() => SimOps.buildIvfAuto(spark, ds)),
+        "appendToIvf" -> (() => SimOps.appendToIvf(spark, ds,
+          Tables.embeddings(spark, ds).limit(0))),
+        "v05" -> (() => { SimOps.simIvf(spark, ds).collect(); () }))
+      for ((name, run) <- builds) {
+        SimOps.clearIvfCaches()
+        val e = intercept[SimOps.MissingSeedVectors](run())
+        assert(e.getMessage.contains(s"vec_id ${SimOps.KmeansSeedLo}.."),
+          s"$name: ${e.getMessage}")
+      }
+      assert(graft.ops.Warehouse.latest("ivf", ds).isEmpty,
+        "a failed IVF build left an artifact")
+    } finally {
+      graft.ops.Warehouse.invalidateDataset(ds)
+      SimOps.clearIvfCaches()
+    }
+  }
+
   test("ADC top-k: int8-representable codes, integer ranking matches a hand scorer, zero vectors excluded") {
     // forged corpus: 3 query-range vectors (ids < 20), 2 candidates
     // past the query range, one zero vector that must vanish entirely

@@ -194,6 +194,26 @@ class WarehouseSpec extends SparkSpecBase {
     }
   }
 
+  test("an unreadable source fails the build loudly instead of keying as a constant") {
+    withTempRoot { root =>
+      val ds = java.nio.file.Files.createTempDirectory("graft-wh-nosrc").toString
+      val builds = Warehouse.buildsRun.get()
+      var ran = false
+      val e = intercept[java.io.UncheckedIOException] {
+        Warehouse.getOrBuild("nosrc", ds, "documents.parquet") { tmp =>
+          ran = true
+          java.nio.file.Files.createDirectories(tmp)
+          ()
+        }
+      }
+      assert(e.getMessage.contains("documents.parquet"), e.getMessage)
+      assert(!ran, "the build ran under a key no source version backs")
+      assert(Warehouse.buildsRun.get() == builds)
+      assert(new java.io.File(root).list().isEmpty,
+        "an artifact landed for an unreadable source")
+    }
+  }
+
   test("writeParquet keeps an empty relation readable with its schema") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-wh-empty").toString
