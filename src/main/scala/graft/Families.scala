@@ -39,14 +39,16 @@ object Families {
   val all: Seq[Family] = Seq(
     Family("ivf", () => ops.SimOps.clearIvfCaches(), Seq("ivf", "kmeans"),
       (s, d) => ops.SimOps.buildIvf(s, d)),
-    // the v15 k ~ sqrt(n) family: cold-reset sweeps only the
-    // NON-DEFAULT ivf/kmeans params so a settle re-run never forces the
-    // sibling v05 serve through a default-family rebuild
+    // the v15 k ~ sqrt(n) family: cold-reset sweeps every ivf/kmeans
+    // family EXCEPT the default ivf's — `ivf@default` and its model,
+    // keyed `kmeans@k8-s100` — so neither a settle re-run's v05 serve
+    // nor the next appendToIvf (which freezes that model) rebuilds
     Family("ivfauto", () => ops.SimOps.clearIvfCaches(), Seq.empty,
       (s, d) => ops.SimOps.buildIvfAuto(s, d),
       d => {
         ops.Warehouse.invalidateNonDefault("ivf", d)
-        ops.Warehouse.invalidateNonDefault("kmeans", d)
+        ops.Warehouse.invalidateNonDefault("kmeans", d,
+          ops.SimOps.DefaultKmeansParams)
       }),
     Family("sig", () => ops.TextOps.clearSigCache(), Seq("sig"),
       (s, d) => ops.TextOps.buildSigIndex(s, d)),

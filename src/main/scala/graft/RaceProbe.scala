@@ -14,10 +14,12 @@ package graft
   *    [[graft.ops.Warehouse.latest]] as the carry prior, WAIT (default
   *    2000 ms — long enough for a concurrent builder to complete the
   *    new version and PRUNE the prior), then copy the prior's data
-  *    files; a mid-copy prune surfaces as an exception and must route
-  *    through the appendTo* NonFatal fallback — a fresh full build
-  *    that adopts the racing winner. Prints `fellback=1` when the
-  *    prune actually hit, so the harness can assert the path ran.
+  *    files through [[graft.ops.Warehouse.maintain]], the policy every
+  *    appendTo* uses; a mid-copy prune surfaces as an exception and
+  *    must route to a fresh full build that adopts the racing winner.
+  *    Prints `fellback=1` when the prune actually hit (a failure-caused
+  *    rebuild counted by [[graft.ops.Prof.degradedTotal]]), so the
+  *    harness can assert the path ran.
   *
   * Each prints one parseable line; the harness asserts both processes
   * land on the same completed artifact. */
@@ -50,25 +52,20 @@ object RaceProbe {
             java.nio.file.Files.write(tmp.resolve("data.bin"), Array[Byte](1, 2, 3))
             ()
           }
-        var fellBack = 0
-        val dir = ops.Warehouse.latest("race2p", ds) match {
-          case None => fullBuild()
-          case Some(prior) =>
-            try ops.Warehouse.getOrBuild("race2p", ds, "documents.parquet") { tmp =>
-              // the window in which the racing builder completes the
-              // NEW version and prunes `prior` out from under us
-              Thread.sleep(holdMs)
-              ops.Warehouse.copyData(prior, tmp)
-              if (!java.nio.file.Files.exists(tmp.resolve("data.bin")))
-                throw new java.nio.file.NoSuchFileException(
-                  s"$prior vanished mid-carry")
-              ()
-            } catch {
-              case scala.util.control.NonFatal(_) =>
-                fellBack = 1
-                fullBuild()
-            }
+        val dir = ops.Warehouse.maintain("race2p", ds)(fullBuild()) { prior =>
+          ops.Warehouse.getOrBuild("race2p", ds, "documents.parquet") { tmp =>
+            // the window in which the racing builder completes the
+            // NEW version and prunes `prior` out from under us
+            Thread.sleep(holdMs)
+            ops.Warehouse.copyData(prior, tmp)
+            if (!java.nio.file.Files.exists(tmp.resolve("data.bin")))
+              throw new java.nio.file.NoSuchFileException(
+                s"$prior vanished mid-carry")
+            ()
+          }
         }
+        // maintain counts the failed carry (and only it) as a degradation
+        val fellBack = ops.Prof.degradedTotal
         println(s"APPEND_RESULT pid=${ProcessHandle.current.pid} dir=$dir " +
           s"fellback=$fellBack")
       case other => sys.error(s"unknown RaceProbe mode $other")

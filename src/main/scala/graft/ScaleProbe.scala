@@ -292,12 +292,15 @@ object ScaleProbe {
     ops.Warehouse.invalidateDataset(tmpDs)
     // degradation census (Prof): every safe fallback the appends took —
     // a healthy probe reports 0; a nonzero count means the steady state
-    // pays a full-recompute path per batch
+    // pays a full-recompute path per batch. `append_rebuilds` counts
+    // every append that rebuilt, deliberate policy rebuilds included.
     // …and beside it the staged-compaction miss counter: a soak where
     // staging persistently fails would otherwise only show as backstop
     // latency (the synchronous slack-2 rewrite riding an append)
     out ++ outCounts ++ Seq(
       "degraded" -> ops.Prof.degradedTotal.toDouble,
+      "append_rebuilds" -> ops.Warehouse.appendCensus
+        .collect { case (t, n) if t.taken == "rebuild" => n }.sum.toDouble,
       "stage_misses" -> ops.Warehouse.stageMisses.get().toDouble)
   }
 }

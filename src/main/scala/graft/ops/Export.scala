@@ -538,33 +538,26 @@ object Export {
     * frame set derives from the prior artifact's own file names, so no
     * separate batch argument (or meta table) is needed. Falls back to
     * the idempotent full build on a missing prior or any failure. */
-  def appendToGeoTiffFrames(s: SparkSession, d: String): Unit = {
-    Warehouse.latest("gtiff", d) match {
-      case None => buildGeoTiffFrames(s, d)
-      case Some(prior) =>
-        try {
-          Warehouse.getOrBuild("gtiff", d, "lineitem.parquet") { tmp =>
-            java.nio.file.Files.createDirectories(tmp)
-            Warehouse.copyData(prior, tmp)
-            val st = java.nio.file.Files.list(java.nio.file.Paths.get(prior))
-            val maxPrior =
-              try {
-                import scala.jdk.CollectionConverters._
-                st.iterator().asScala.map(_.getFileName.toString)
-                  .filter(_.endsWith(".tif"))
-                  .map(_.stripSuffix(".tif")).maxOption
-              } finally st.close()
-            val cube = Pipeline.cubeIndex(s, d)
-            writeGeoTiffs(
-              maxPrior.fold(cube)(mx => cube.filter(col("date") > lit(mx))),
-              tmp.toString, Resample.SrcGrid, lzw = true)
-          }
-          ()
-        } catch {
-          case scala.util.control.NonFatal(_) => buildGeoTiffFrames(s, d)
-        }
+  def appendToGeoTiffFrames(s: SparkSession, d: String): Unit =
+    Warehouse.maintain("gtiff", d)(buildGeoTiffFrames(s, d)) { prior =>
+      Warehouse.getOrBuild("gtiff", d, "lineitem.parquet") { tmp =>
+        java.nio.file.Files.createDirectories(tmp)
+        Warehouse.copyData(prior, tmp)
+        val st = java.nio.file.Files.list(java.nio.file.Paths.get(prior))
+        val maxPrior =
+          try {
+            import scala.jdk.CollectionConverters._
+            st.iterator().asScala.map(_.getFileName.toString)
+              .filter(_.endsWith(".tif"))
+              .map(_.stripSuffix(".tif")).maxOption
+          } finally st.close()
+        val cube = Pipeline.cubeIndex(s, d)
+        writeGeoTiffs(
+          maxPrior.fold(cube)(mx => cube.filter(col("date") > lit(mx))),
+          tmp.toString, Resample.SrcGrid, lzw = true)
+      }
+      ()
     }
-  }
 
   /** x08 — the GeoTIFF SINK under the oracle (VERDICT r8 #8): decode
     * every written frame back and declare, per frame, the parsed header

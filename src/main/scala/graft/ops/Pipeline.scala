@@ -254,24 +254,12 @@ object Pipeline {
     * scenes), or when the batch violates the append-only-by-date
     * contract. `appendedRaw` must be exactly the raw pixel rows added
     * since the prior version. */
-  def appendToCube(s: SparkSession, d: String, appendedRaw: DataFrame): Unit = {
-    val priorMeta = Warehouse.latest("cube", d).flatMap { prior =>
-      scala.util.Try {
-        val m = Io.parquet(s, s"$prior/meta")
-          .select("n_scenes", "max_date").head()
-        (prior, m.getLong(0), m.getString(1))
-      }.toOption
+  def appendToCube(s: SparkSession, d: String, appendedRaw: DataFrame): Unit =
+    Warehouse.maintain("cube", d)(buildCube(s, d)) { prior =>
+      val m = Io.parquet(s, s"$prior/meta").select("n_scenes", "max_date").head()
+      if (m.getLong(0) < 3) throw Warehouse.Rebuild("few-scenes")
+      appendToCubeIncremental(s, d, appendedRaw, prior, m.getLong(0), m.getString(1))
     }
-    priorMeta match {
-      case Some((prior, nScenes, maxDate)) if nScenes >= 3 =>
-        // the incremental path is an optimization: any failure (a
-        // pruned prior, a contract violation) falls back to the
-        // idempotent full build
-        try appendToCubeIncremental(s, d, appendedRaw, prior, nScenes, maxDate)
-        catch { case scala.util.control.NonFatal(_) => buildCube(s, d) }
-      case _ => buildCube(s, d)
-    }
-  }
 
   private def appendToCubeIncremental(s: SparkSession, d: String,
       batchRaw: DataFrame, prior: String, priorScenes: Long,
@@ -297,11 +285,10 @@ object Pipeline {
         val nGran = mrow.getLong(0)
         // contract check against ALL batch granules (pre-QC): a batch
         // touching an already-seen date — even one that never produced
-        // cube rows — would compute partial-granule verdicts; the
-        // require sends it to the full-rebuild fallback instead
-        require(nGran == 0L || mrow.getString(1) > priorMaxDate,
-          s"appended dates must follow the prior corpus " +
-            s"(${mrow.getString(1)} <= $priorMaxDate)")
+        // cube rows — would compute partial-granule verdicts, so it
+        // declines to the full rebuild instead
+        if (nGran > 0L && mrow.getString(1) <= priorMaxDate)
+          throw Warehouse.Rebuild("seen-date")
         Warehouse.copyData(s"$prior/cube", tmp.resolve("cube"))
         if (nGran > 0) {
           val (gated, gPin) = Checkpoints.pin(
@@ -401,19 +388,11 @@ object Pipeline {
     * full build on a missing/pre-meta prior or a batch that touches an
     * already-seen date (partial-granule QC would diverge). */
   def appendToGranuleCache(s: SparkSession, d: String,
-      batchRaw: DataFrame): Unit = {
-    val priorMeta = Warehouse.latest("gcache", d).flatMap { prior =>
-      scala.util.Try(
-        Io.parquet(s, s"$prior/meta").select("max_date").head().getString(0)
-      ).toOption.map(maxDate => (prior, maxDate))
+      batchRaw: DataFrame): Unit =
+    Warehouse.maintain("gcache", d)(buildGranuleCache(s, d)) { prior =>
+      appendToGranuleCacheIncremental(s, d, batchRaw, prior, Io.parquet(
+        s, s"$prior/meta").select("max_date").head().getString(0))
     }
-    priorMeta match {
-      case Some((prior, maxDate)) =>
-        try appendToGranuleCacheIncremental(s, d, batchRaw, prior, maxDate)
-        catch { case scala.util.control.NonFatal(_) => buildGranuleCache(s, d) }
-      case _ => buildGranuleCache(s, d)
-    }
-  }
 
   private def appendToGranuleCacheIncremental(s: SparkSession, d: String,
       batchRaw: DataFrame, prior: String, priorMaxDate: String): Unit = {
@@ -428,9 +407,9 @@ object Pipeline {
           min(date_format(col("time"), "yyyy-MM-dd")).as("dmin"),
           max(date_format(col("time"), "yyyy-MM-dd")).as("dmax")).head()
         val nGran = mrow.getLong(0)
-        require(nGran == 0L || mrow.getString(1) > priorMaxDate,
-          s"appended dates must follow the prior cache " +
-            s"(${mrow.getString(1)} <= $priorMaxDate)")
+        // appended dates must follow the prior cache
+        if (nGran > 0L && mrow.getString(1) <= priorMaxDate)
+          throw Warehouse.Rebuild("seen-date")
         Warehouse.copyTree(s"$prior/cache", tmp.resolve("cache"))
         if (nGran > 0) {
           val pass = col("contamination_pct") <= Quality.MaxContaminationPct &&

@@ -265,6 +265,9 @@ object SimOps {
     * prove the quantizer is parameterized, not hard-wired. */
   val KmeansK = 8
   val KmeansSeedLo = 100
+  /** Warehouse params of the default quantizer's `kmeans` family (the
+    * v05/v07/v08 model, which an ivf append freezes). */
+  private[graft] val DefaultKmeansParams = s"k$KmeansK-s$KmeansSeedLo"
 
   /** Quantizer training-sample target: Lloyd's trains on roughly this
     * many vectors REGARDLESS of corpus size (the faiss posture — a
@@ -680,25 +683,14 @@ object SimOps {
     * per-vector assignment is independent, so batch-only assignment
     * composes exactly (spec-asserted). `appended` must be exactly the
     * vectors added since the prior version. */
-  def appendToIvf(s: SparkSession, d: String, appended: DataFrame): Unit = {
-    val priorMeta = Warehouse.latest("ivf", d).flatMap { prior =>
-      scala.util.Try {
-        val m = Io.parquet(s, s"$prior/meta")
-          .select("n_vectors", "trained_n").head()
-        (prior, m.getLong(0), m.getLong(1))
-      }.toOption
+  def appendToIvf(s: SparkSession, d: String, appended: DataFrame): Unit =
+    Warehouse.maintain("ivf", d)(buildIvf(s, d)) { prior =>
+      val m = Io.parquet(s, s"$prior/meta")
+        .select("n_vectors", "trained_n").head()
+      val (n, trainedN) = (m.getLong(0) + appended.count(), m.getLong(1))
+      if (n > trainedN * MaxIvfGrowth) throw Warehouse.Rebuild("growth")
+      appendToIvfIncremental(s, d, appended, n, trainedN, prior)
     }
-    priorMeta match {
-      case Some((prior, priorN, trainedN)) =>
-        val n = priorN + appended.count()
-        if (n > trainedN * MaxIvfGrowth) buildIvf(s, d) // retrain policy
-        else {
-          try appendToIvfIncremental(s, d, appended, n, trainedN, prior)
-          catch { case scala.util.control.NonFatal(_) => buildIvf(s, d) }
-        }
-      case _ => buildIvf(s, d)
-    }
-  }
 
   private def appendToIvfIncremental(s: SparkSession, d: String,
       appended: DataFrame, n: Long, trainedN: Long, prior: String): Unit = {
@@ -707,11 +699,11 @@ object SimOps {
     // (the v08 serve, this assignment, even a later full ivf rebuild at
     // this corpus version) shares one pinned quantizer; the retrain
     // path above is the only way centroids change
-    val priorKm = Warehouse.latest("kmeans", d, s"k$KmeansK-s$KmeansSeedLo")
+    val priorKm = Warehouse.latest("kmeans", d, DefaultKmeansParams)
       .getOrElse(throw new IllegalStateException(
         s"no prior kmeans artifact to freeze for $d"))
     Warehouse.getOrBuild("kmeans", d, "embeddings.parquet",
-      s"k$KmeansK-s$KmeansSeedLo") { tmp => Warehouse.copyData(priorKm, tmp) }
+      DefaultKmeansParams) { tmp => Warehouse.copyData(priorKm, tmp) }
     Warehouse.getOrBuild("ivf", d, "embeddings.parquet") { tmp =>
       Warehouse.copyTree(s"$prior/cells", tmp.resolve("cells"))
       val rows = trainedRows(s, d) // loads the frozen copy at this version
@@ -1574,44 +1566,27 @@ object SimOps {
   private val nearDupReconciled =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  def appendToNearDup(s: SparkSession, d: String, appended: DataFrame): Unit = {
-    val priorMeta = Warehouse.latest("neardup", d).flatMap { prior =>
-      scala.util.Try {
-        val m = Io.parquet(s, s"$prior/meta")
-          .select("n_vectors", "bits").head()
-        (prior, m.getLong(0), m.getInt(1))
-      }.toOption
+  def appendToNearDup(s: SparkSession, d: String, appended: DataFrame): Unit =
+    Warehouse.maintain("neardup", d)(buildNearDup(s, d)) { prior =>
+      val m = Io.parquet(s, s"$prior/meta").select("n_vectors", "bits").head()
+      // corpus size = prior meta + batch size: the artifact already
+      // persists n_vectors, so the append path runs a batch-sized
+      // count, never a corpus-wide one. The accumulation contract
+      // (every batch applied exactly once) is reconciled against the
+      // REAL corpus row count the first time this session adopts the
+      // meta — a parquet-footer metadata read, no data scan — and a
+      // mismatch (missed/overlapping batch, restored backup) routes
+      // to the full rebuild before the geometry can silently drift.
+      val n = m.getLong(0) + Prof.tt("neardup+")("batch-count")(appended.count())
+      if (nearDupReconciled.add(d) &&
+          Prof.tt("neardup+")("reconcile")(Tables.embeddings(s, d).count()) != n)
+        throw Warehouse.Rebuild("reconcile")
+      // a grown corpus can change the band geometry: different bucket
+      // keys, nothing to carry over
+      val bits = bandBits(n)
+      if (m.getInt(1) != bits) throw Warehouse.Rebuild("band-bits")
+      appendToNearDupIncremental(s, d, appended, n, bits, prior)
     }
-    priorMeta match {
-      case Some((prior, priorN, priorBits)) =>
-        // corpus size = prior meta + batch size: the artifact already
-        // persists n_vectors, so the append path runs a batch-sized
-        // count, never a corpus-wide one. The accumulation contract
-        // (every batch applied exactly once) is reconciled against the
-        // REAL corpus row count the first time this session adopts the
-        // meta — a parquet-footer metadata read, no data scan — and a
-        // mismatch (missed/overlapping batch, restored backup) routes
-        // to the full rebuild before the geometry can silently drift.
-        val n = priorN + Prof.tt("neardup+")("batch-count")(appended.count())
-        if (nearDupReconciled.add(d) &&
-            Prof.tt("neardup+")("reconcile")(Tables.embeddings(s, d).count()) != n) {
-          buildNearDup(s, d)
-        } else {
-          val bits = bandBits(n)
-          if (priorBits == bits) {
-            // the incremental path is an optimization: if a concurrent
-            // newer-version build prunes `prior` mid-read (or anything
-            // else fails), fall back to the idempotent full build
-            try appendToNearDupIncremental(s, d, appended, n, bits, prior)
-            catch { case scala.util.control.NonFatal(_) => buildNearDup(s, d) }
-          } else buildNearDup(s, d)
-        }
-      case _ =>
-        // no prior artifact or a pre-meta artifact: bucket keys may
-        // differ, nothing to carry over — full build
-        buildNearDup(s, d)
-    }
-  }
 
   private def appendToNearDupIncremental(s: SparkSession, d: String,
       appended: DataFrame, n: Long, bits: Int,
@@ -1670,13 +1645,11 @@ object SimOps {
       // collected size guard (the micro-batch contract is not a bound):
       // the limit caps the driver pull AND the isin literal the scan
       // prunes on; an over-budget batch (a bulk backfill routed through
-      // the append path) throws, and the caller's NonFatal fallback
-      // runs the idempotent full rebuild — which such a batch deserves
+      // the append path) declines to the idempotent full rebuild —
+      // which such a batch deserves
       val batchKeys = bc.select("key").distinct()
         .limit(MaxBatchKeys + 1).collect().map(_.getString(0))
-      if (batchKeys.length > MaxBatchKeys) sys.error(
-        s"appendToNearDup: batch hits ${batchKeys.length} distinct bucket " +
-          s"keys, over the $MaxBatchKeys isin budget — rebuilding")
+      if (batchKeys.length > MaxBatchKeys) throw Warehouse.Rebuild("batch-keys")
       val priorMembers = Io.parquet(s, s"$prior/members")
       val (members, mPin) = tt("pin-members")(Checkpoints.pin(
         priorMembers.filter(col("key").isin(batchKeys.toSeq: _*))

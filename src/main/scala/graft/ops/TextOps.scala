@@ -317,25 +317,16 @@ object TextOps {
     * version exists. `appended` must be exactly the documents added
     * since the prior version — the caller's append manifest (a
     * streaming sink's new-files batch). */
-  def appendToSigIndex(s: SparkSession, d: String, appended: DataFrame): Unit = {
-    Warehouse.latest("sig", d) match {
-      case None => buildSigIndex(s, d)
-      case Some(prior) =>
-        // a concurrent build of a newer version may prune `prior` while
-        // this updater reads it — the incremental path is an
-        // optimization, so any failure falls back to the (idempotent)
-        // full build rather than surfacing the race
-        try {
-          Warehouse.getOrBuild("sig", d, "documents.parquet") { tmp =>
-            Warehouse.copyData(prior, tmp)
-            signatures(appended).write.mode("append").parquet(tmp.toString)
-            Warehouse.compactIfNeeded(s, tmp, Seq("doc_id"))
-            ()
-          }
-          ()
-        } catch { case scala.util.control.NonFatal(_) => buildSigIndex(s, d) }
+  def appendToSigIndex(s: SparkSession, d: String, appended: DataFrame): Unit =
+    Warehouse.maintain("sig", d)(buildSigIndex(s, d)) { prior =>
+      Warehouse.getOrBuild("sig", d, "documents.parquet") { tmp =>
+        Warehouse.copyData(prior, tmp)
+        signatures(appended).write.mode("append").parquet(tmp.toString)
+        Warehouse.compactIfNeeded(s, tmp, Seq("doc_id"))
+        ()
+      }
+      ()
     }
-  }
 
   // ---------------------------------------------------------------- t06
   /** The t06 pair relation (doc_a, doc_b, est_jaccard), unordered — the
@@ -927,17 +918,9 @@ object TextOps {
     * (spec-asserted). Text banding has no corpus-dependent geometry
     * (4 fixed bands), so unlike the embedding family there is no
     * bandBits fallback — only a missing prior forces the full build. */
-  def appendToTextDup(s: SparkSession, d: String, appended: DataFrame): Unit = {
-    Warehouse.latest("textdup", d) match {
-      case None => buildTextDup(s, d)
-      case Some(prior) =>
-        // the incremental path is an optimization: if a concurrent
-        // newer-version build prunes `prior` mid-read (or anything
-        // else fails), fall back to the idempotent full build
-        try appendToTextDupIncremental(s, d, appended, prior)
-        catch { case scala.util.control.NonFatal(_) => buildTextDup(s, d) }
-    }
-  }
+  def appendToTextDup(s: SparkSession, d: String, appended: DataFrame): Unit =
+    Warehouse.maintain("textdup", d)(buildTextDup(s, d))(
+      appendToTextDupIncremental(s, d, appended, _))
 
   /** Sort keys of the textdup artifact's append-maintained tables —
     * doc_b carries the high-water min/max stats the funnel's epoch
@@ -1203,14 +1186,9 @@ object TextOps {
     * Row-identical to a full rebuild (spec-asserted, including a
     * cap-crossing resurrection case). Falls back to the full build on
     * a missing/pre-layout prior or a non-monotonic batch. */
-  def appendToFunnel(s: SparkSession, d: String, appended: DataFrame): Unit = {
-    Warehouse.latest("funnel", d) match {
-      case None => buildFunnel(s, d)
-      case Some(prior) =>
-        try appendToFunnelIncremental(s, d, appended, prior)
-        catch { case scala.util.control.NonFatal(_) => buildFunnel(s, d) }
-    }
-  }
+  def appendToFunnel(s: SparkSession, d: String, appended: DataFrame): Unit =
+    Warehouse.maintain("funnel", d)(buildFunnel(s, d))(
+      appendToFunnelIncremental(s, d, appended, _))
 
   private def appendToFunnelIncremental(s: SparkSession, d: String,
       appended: DataFrame, prior: String): Unit = {
@@ -1220,14 +1198,13 @@ object TextOps {
       val priorHashes = Io.parquet(s, s"$prior/hashes")
       val priorMax = priorHashes.agg(max("doc_id")).head().getLong(0)
       val batchMin = appended.agg(min("doc_id")).head().getLong(0)
-      require(batchMin > priorMax,
-        s"appended doc_ids must exceed the prior corpus ($batchMin <= $priorMax)")
+      // appended doc_ids must exceed the prior corpus
+      if (batchMin <= priorMax) throw Warehouse.Rebuild("non-monotonic")
       // the decontamination eval set is the corpus HEAD (doc_id <
       // EvalDocs): a batch landing inside that range would GROW the
       // eval set and silently change prior docs' stage-5 verdicts —
       // only a full rebuild re-evaluates them
-      require(batchMin >= EvalDocs,
-        s"append extends the eval head ($batchMin < $EvalDocs) — full rebuild")
+      if (batchMin < EvalDocs) throw Warehouse.Rebuild("eval-head")
       val batchHashes = appended.select(col("doc_id"),
         md5(col("text").cast("binary")).as("h"))
       // the hash table is a pure per-doc function of an append-only
@@ -2454,9 +2431,11 @@ object TextOps {
     * COUNT the pinned stages (a local-block pass), which on a lazy
     * relation would silently recompute the whole stage chain per
     * count and, without the checkpoint barrier, regress stages 3-5 to
-    * the measured-bad pushed-down plan. */
+    * the measured-bad pushed-down plan. `pinArm` forces one stage-3-5
+    * arm (the arm-equality spec); by default [[funnelPinPays]] picks. */
   private[graft] def funnelStages(s: SparkSession, d: String,
-      pin: DataFrame => DataFrame): Seq[(String, DataFrame)] = {
+      pin: DataFrame => DataFrame,
+      pinArm: Option[Boolean] = None): Seq[(String, DataFrame)] = {
     import org.apache.spark.sql.expressions.Window
     // pins are EAGER (localCheckpoint), so timing each one attributes
     // the build's `stages` step to the stage that actually computed
@@ -2485,15 +2464,8 @@ object TextOps {
     // pass) and the corpus count is a column-pruned metadata scan.
     val nDocs = doc.select("doc_id").count()
     val k2n = k2.count()
-    // `graft.funnel.pin` = on|off pins one arm (measurement/spec
-    // override, like graft.textdup.mine); default `auto` dispatches on
-    // the survivor census. Both arms are membership-identical
-    // (spec-locked), so the knob can never change results.
-    val usePin = sys.props.getOrElse("graft.funnel.pin", "auto") match {
-      case "on" => true
-      case "off" => false
-      case _ => funnelPinPays(k2n, nDocs)
-    }
+    // both arms are membership-identical (spec-locked)
+    val usePin = pinArm.getOrElse(funnelPinPays(k2n, nDocs))
     val (k3, k4, k5) = if (usePin) {
       // Stages 3-5 evaluate their per-doc flags over SURVIVORS ONLY —
       // k3 inner-joins the quality gate and k4/k5 anti-join repetitive /
@@ -2939,14 +2911,9 @@ object TextOps {
     * much of the vocabulary is a corpus-scale event, not an append) or
     * a pending-correction set past CorrCap (serve-side broadcast
     * bound), plus any unexpected failure. */
-  def appendToFreq(s: SparkSession, d: String, appended: DataFrame): Unit = {
-    Warehouse.latest("freq", d) match {
-      case None => buildFreq(s, d)
-      case Some(prior) =>
-        try appendToFreqIncremental(s, d, appended, prior)
-        catch { case scala.util.control.NonFatal(_) => buildFreq(s, d) }
-    }
-  }
+  def appendToFreq(s: SparkSession, d: String, appended: DataFrame): Unit =
+    Warehouse.maintain("freq", d)(buildFreq(s, d))(
+      appendToFreqIncremental(s, d, appended, _))
 
   /** File count for a sorted batch-posting append: one file for a
     * normal micro-batch (tiny-file accumulation is the enemy — post/
@@ -2982,8 +2949,7 @@ object TextOps {
           .select(col("w"), (length(bin(col("c") + col("b_c"))) -
             length(bin(col("c")))).cast("int").as("dk"))
           .filter(col("dk") > 0).collect()
-        require(crossed.length <= maxCrossed,
-          s"${crossed.length} token classes crossed — compact via rebuild")
+        if (crossed.length > maxCrossed) throw Warehouse.Rebuild("crossed-cap")
         val grown = priorCounts.join(broadcast(bc), Seq("w"), "left")
           .select(col("w"), (col("c") + coalesce(col("b_c"), lit(0L))).as("c"))
         val matched = priorCounts
@@ -3019,9 +2985,8 @@ object TextOps {
           try {
             val affected = corr.count()
             val priorDocs = Io.parquet(s, s"$prior/scores").count()
-            require(priorCorrRows + affected <=
-              math.max(CorrCapRows, priorDocs / 20),
-              "pending corrections past the serve bound — compact via rebuild")
+            if (priorCorrRows + affected > math.max(CorrCapRows, priorDocs / 20))
+              throw Warehouse.Rebuild("corr-cap")
             corr.write.mode("append").parquet(s"$tmp/corr")
           } finally { corr.unpersist(); () }
         }
@@ -3306,14 +3271,9 @@ object TextOps {
     * class crossings). `appended` must be exactly the docs added since
     * the prior version; any failure routes to the idempotent full
     * rebuild. */
-  def appendToKeywords(s: SparkSession, d: String, appended: DataFrame): Unit = {
-    Warehouse.latest("keywords", d) match {
-      case None => buildKeywords(s, d)
-      case Some(prior) =>
-        try appendToKeywordsIncremental(s, d, appended, prior)
-        catch { case scala.util.control.NonFatal(_) => buildKeywords(s, d) }
-    }
-  }
+  def appendToKeywords(s: SparkSession, d: String, appended: DataFrame): Unit =
+    Warehouse.maintain("keywords", d)(buildKeywords(s, d))(
+      appendToKeywordsIncremental(s, d, appended, _))
 
   private def appendToKeywordsIncremental(s: SparkSession, d: String,
       appended: DataFrame, prior: String): Unit = {

@@ -218,6 +218,62 @@ object Warehouse {
       .lastOption.map(_.toString)
   }
 
+  /** A deliberate decline of the incremental path: an incremental body
+    * throws it to send the append to the full rebuild under a named
+    * cause — a policy (growth past a bound, a contract-violating batch),
+    * not a failure, so it never counts as a degradation. */
+  final case class Rebuild(cause: String)
+      extends RuntimeException(cause, null, false, false)
+
+  /** One maintenance decision: `taken` is `incremental` or `rebuild`;
+    * a rebuild's `cause` is `no-prior`, a [[Rebuild]] policy name, or
+    * the class of the exception that failed the incremental path. */
+  final case class Taken(family: String, taken: String, cause: String = "")
+
+  private val maintained = new java.util.concurrent.ConcurrentHashMap[
+    Taken, java.util.concurrent.atomic.AtomicLong]()
+
+  /** Per-(family, path, cause) counts of every [[maintain]] call this
+    * JVM made — the census specs and probes read the path taken from. */
+  private[graft] def appendCensus: Map[Taken, Long] = {
+    import scala.jdk.CollectionConverters._
+    maintained.asScala.map { case (k, v) => (k, v.get()) }.toMap
+  }
+
+  /** The one append-or-rebuild policy of every maintained artifact
+    * family: run `incremental` against the latest completed artifact of
+    * `family@dataset`, else `rebuild` — when there is no prior, when the
+    * body declines with a [[Rebuild]], or when it fails (a concurrent
+    * build pruned the prior mid-read, a corrupt table): the rebuild is
+    * idempotent, so a failed incremental path costs time, never rows.
+    * Every call records its path in [[appendCensus]]; a genuine failure
+    * also counts in [[Prof.degradedTotal]], so a broken incremental path
+    * cannot pass for a working one. */
+  def maintain[A](family: String, d: String)(rebuild: => A)(
+      incremental: String => A): A = {
+    def record(t: Taken): Unit = {
+      maintained.computeIfAbsent(t,
+        _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
+      ()
+    }
+    latest(family, d) match {
+      case None => record(Taken(family, "rebuild", "no-prior")); rebuild
+      case Some(prior) =>
+        try {
+          val a = incremental(prior)
+          record(Taken(family, "incremental"))
+          a
+        } catch {
+          case Rebuild(cause) => record(Taken(family, "rebuild", cause)); rebuild
+          case scala.util.control.NonFatal(e) =>
+            val cause = e.getClass.getName
+            record(Taken(family, "rebuild", cause))
+            Prof.degrade(family, s"append:$cause")
+            rebuild
+        }
+    }
+  }
+
   /** (source mtime, source size, built_ms) parsed from a manifest;
     * zeros when unreadable (sorts first, so a corrupt manifest never
     * shadows a healthy prior). */
@@ -311,14 +367,16 @@ object Warehouse {
     * explicit-k index variants (the v15 auto-geometry family) without
     * touching the default family a sibling query serves from; the
     * bench's cold-reset for `ivfauto_build` must not force the next
-    * v05 serve through a rebuild. */
-  def invalidateNonDefault(table: String, d: String): Unit = {
+    * v05 serve through a rebuild. `default` names the kept family's
+    * params when the default one is keyed explicitly (the default ivf
+    * trains `kmeans@k8-s100`, not `kmeans@default`). */
+  def invalidateNonDefault(table: String, d: String, default: String = ""): Unit = {
     val head = sanitize(s"$table@")
     val tag = sanitize(s"@${dsTag(d)}@")
-    val default = prefix(table, "", d)
+    val keep = prefix(table, default, d)
     listRoot().foreach { f =>
       val n = f.getFileName.toString
-      if (n.startsWith(head) && n.contains(tag) && !n.startsWith(default))
+      if (n.startsWith(head) && n.contains(tag) && !n.startsWith(keep))
         rmTree(f)
     }
   }

@@ -43,6 +43,14 @@ class IncrementalSpec extends SparkSpecBase {
     copies.unionByName(twin).unionByName(twin2).unionByName(fresh)
   }
 
+  /** Run one append and assert the path it took: a lock of "append ==
+    * rebuild" proves nothing unless the append really ran incrementally. */
+  private def expect(family: String, taken: String = "incremental",
+      cause: String = "")(f: => Unit): Unit = {
+    val (t, _) = MaintainSpec.taken(family)(f)
+    assert(t == Warehouse.Taken(family, taken, cause), s"$family append took $t")
+  }
+
   private def resetTextCaches(): Unit = {
     TextOps.clearSigCache()
     TextOps.clearTextDupCache()
@@ -87,9 +95,9 @@ class IncrementalSpec extends SparkSpecBase {
     val batch = makeBatch(base)
     base.unionByName(batch).write.mode("overwrite")
       .parquet(s"$ds/documents.parquet")
-    TextOps.appendToSigIndex(spark, ds, batch)
-    TextOps.appendToTextDup(spark, ds, batch)
-    TextOps.appendToFunnel(spark, ds, batch)
+    expect("sig")(TextOps.appendToSigIndex(spark, ds, batch))
+    expect("textdup")(TextOps.appendToTextDup(spark, ds, batch))
+    expect("funnel")(TextOps.appendToFunnel(spark, ds, batch))
     def snap() = (
       TextOps.dedupMinhash(spark, ds).collect(),
       TextOps.ngramJaccard(spark, ds).collect(),
@@ -155,11 +163,11 @@ class IncrementalSpec extends SparkSpecBase {
     val e0 = epochOf("textdup", "epoch")
     assert(e0 == epochOf("funnel", "pairsepoch"),
       "funnel build did not record the textdup epoch")
-    TextOps.appendToSigIndex(spark, ds, batch)
-    TextOps.appendToTextDup(spark, ds, batch)
+    expect("sig")(TextOps.appendToSigIndex(spark, ds, batch))
+    expect("textdup")(TextOps.appendToTextDup(spark, ds, batch))
     assert(epochOf("textdup", "epoch") == e0,
       "pure-add textdup append bumped the epoch — funnel delta would disengage")
-    TextOps.appendToFunnel(spark, ds, batch)
+    expect("funnel")(TextOps.appendToFunnel(spark, ds, batch))
     assert(epochOf("funnel", "pairsepoch") == e0,
       "funnel append did not carry the incorporated epoch forward")
     val f1 = TextOps.funnelIndex(spark, ds).orderBy("stage", "doc_id").collect()
@@ -204,9 +212,9 @@ class IncrementalSpec extends SparkSpecBase {
           col("source"), col("n_chars")))
     base.unionByName(batch).write.mode("overwrite")
       .parquet(s"$ds/documents.parquet")
-    TextOps.appendToSigIndex(spark, ds, batch)
-    TextOps.appendToTextDup(spark, ds, batch)
-    TextOps.appendToFunnel(spark, ds, batch)
+    expect("sig")(TextOps.appendToSigIndex(spark, ds, batch))
+    expect("textdup")(TextOps.appendToTextDup(spark, ds, batch))
+    expect("funnel")(TextOps.appendToFunnel(spark, ds, batch))
     val f1 = TextOps.funnelIndex(spark, ds).orderBy("stage", "doc_id").collect()
     // the degenerate batch docs actually flowed: the twin and the null
     // text both die at stage 1 (exact dedup), never re-entering
@@ -245,8 +253,8 @@ class IncrementalSpec extends SparkSpecBase {
     val batch = makeBatch(base)
     base.unionByName(batch).write.mode("overwrite")
       .parquet(s"$ds/documents.parquet")
-    TextOps.appendToSigIndex(spark, ds, batch)
-    TextOps.appendToTextDup(spark, ds, batch)
+    expect("sig")(TextOps.appendToSigIndex(spark, ds, batch))
+    expect("textdup")(TextOps.appendToTextDup(spark, ds, batch))
     val incDir = Warehouse.latest("textdup", ds).get
     assert(incDir != prior, "append produced no new textdup version")
     for ((sub, f) <- Seq("pairs" -> pp, "pairbk" -> pb, "verify" -> pv))
@@ -276,9 +284,9 @@ class IncrementalSpec extends SparkSpecBase {
     val batch = makeBatch(base)
     base.unionByName(batch).write.mode("overwrite")
       .parquet(s"$ds/documents.parquet")
-    TextOps.appendToSigIndex(spark, ds, batch)
-    TextOps.appendToTextDup(spark, ds, batch)
-    TextOps.appendToFunnel(spark, ds, batch)
+    expect("sig")(TextOps.appendToSigIndex(spark, ds, batch))
+    expect("textdup")(TextOps.appendToTextDup(spark, ds, batch))
+    expect("funnel")(TextOps.appendToFunnel(spark, ds, batch))
     val stages = TextOps.funnelIndex(spark, ds).collect()
       .groupBy(_.getString(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     // exact copies of prior docs lose stage 1 to the prior keeper
@@ -313,9 +321,9 @@ class IncrementalSpec extends SparkSpecBase {
         col("lang"), col("source"), col("n_chars"))
     base.unionByName(batch).write.mode("overwrite")
       .parquet(s"$ds/documents.parquet")
-    TextOps.appendToSigIndex(spark, ds, batch)
-    TextOps.appendToTextDup(spark, ds, batch)
-    TextOps.appendToFunnel(spark, ds, batch)
+    expect("sig")(TextOps.appendToSigIndex(spark, ds, batch))
+    expect("textdup")(TextOps.appendToTextDup(spark, ds, batch))
+    expect("funnel", "rebuild", "eval-head")(TextOps.appendToFunnel(spark, ds, batch))
     val inc = TextOps.funnelIndex(spark, ds).orderBy("stage", "doc_id").collect()
     resetTextCaches()
     Warehouse.invalidate("sig", ds)
@@ -335,19 +343,29 @@ class IncrementalSpec extends SparkSpecBase {
     // build
     val ds = tmpDs("graft-inc-cube-part")
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    val lastDate = li.agg(max(to_date(col("l_shipdate")))).head().getDate(0).toString
-    val heldBack = col("l_shipdate").cast("date") === lit(lastDate) &&
-      col("l_linenumber") >= 4
-    li.filter(!heldBack).write.mode("overwrite").parquet(s"$ds/lineitem.parquet")
+    // the corpus ends on the newest date with rows on BOTH sides of the
+    // split (sf0.001's last date has only high line numbers: holding
+    // those back would leave the prior without the date at all, and the
+    // batch would be a valid strictly-newer append)
+    val lo = col("l_linenumber") < 4
+    val lastDate = li.groupBy(to_date(col("l_shipdate")).as("d"))
+      .agg(max(lo.cast("int")).as("lo"), max((!lo).cast("int")).as("hi"))
+      .filter(col("lo") === 1 && col("hi") === 1)
+      .agg(max("d")).head().getDate(0).toString
+    val corpus = li.filter(to_date(col("l_shipdate")) <= lit(lastDate))
+    val heldBack = col("l_shipdate").cast("date") === lit(lastDate) && !lo
+    corpus.filter(!heldBack).write.mode("overwrite").parquet(s"$ds/lineitem.parquet")
     Pipeline.clearCubeCache()
     Pipeline.buildCube(spark, ds)
     val prior = Warehouse.latest("cube", ds).get
-    li.write.mode("overwrite").parquet(s"$ds/lineitem.parquet")
+    assert(spark.read.parquet(s"$prior/meta").head().getString(1) == lastDate,
+      "the prior must already hold part of the batch's date")
+    corpus.write.mode("overwrite").parquet(s"$ds/lineitem.parquet")
     Pipeline.clearCubeCache()
     val batchRaw = graft.ops.Pixels.pixels(spark, ds)
       .filter(col("date") === lit(lastDate) &&
         col("px_id") % 8 >= 4)
-    Pipeline.appendToCube(spark, ds, batchRaw)
+    expect("cube", "rebuild", "seen-date")(Pipeline.appendToCube(spark, ds, batchRaw))
     val incDir = Warehouse.latest("cube", ds).get
     assert(incDir != prior, "append produced no new cube version")
     def snap() = Pipeline.cubeIndex(spark, ds)
@@ -388,7 +406,7 @@ class IncrementalSpec extends SparkSpecBase {
     Pipeline.clearGranuleCacheCache()
     val batchRaw = graft.ops.Pixels.pixels(spark, ds)
       .filter(col("date") > lit(cutoff))
-    Pipeline.appendToGranuleCache(spark, ds, batchRaw)
+    expect("gcache")(Pipeline.appendToGranuleCache(spark, ds, batchRaw))
     val incDir = Warehouse.latest("gcache", ds).get
     assert(incDir != prior, "append produced no new gcache version")
     assert(java.nio.file.Files.exists(
@@ -437,7 +455,7 @@ class IncrementalSpec extends SparkSpecBase {
     base.unionByName(batch).write.mode("overwrite")
       .parquet(s"$ds/embeddings.parquet")
     SimOps.clearIvfCaches()
-    SimOps.appendToIvf(spark, ds, batch)
+    expect("ivf")(SimOps.appendToIvf(spark, ds, batch))
     val incIvf = Warehouse.latest("ivf", ds).get
     assert(incIvf != priorIvf, "append produced no new ivf version")
     assert(java.nio.file.Files.exists(
@@ -473,7 +491,7 @@ class IncrementalSpec extends SparkSpecBase {
     spark.read.parquet(s"$ds/embeddings2.parquet")
       .write.mode("overwrite").parquet(s"$ds/embeddings.parquet")
     SimOps.clearIvfCaches()
-    SimOps.appendToIvf(spark, ds, big)
+    expect("ivf", "rebuild", "growth")(SimOps.appendToIvf(spark, ds, big))
     val meta = spark.read.parquet(s"${Warehouse.latest("ivf", ds).get}/meta")
       .select("n_vectors", "trained_n").head()
     assert(meta.getLong(0) == meta.getLong(1),
@@ -504,7 +522,7 @@ class IncrementalSpec extends SparkSpecBase {
     base.unionByName(batch).write.mode("overwrite")
       .parquet(s"$ds/documents.parquet")
     TextOps.clearFreqCache()
-    TextOps.appendToFreq(spark, ds, batch)
+    expect("freq")(TextOps.appendToFreq(spark, ds, batch))
     val incDir = Warehouse.latest("freq", ds).get
     assert(incDir != prior, "append produced no new freq version")
     assert(java.nio.file.Files.exists(
@@ -553,7 +571,7 @@ class IncrementalSpec extends SparkSpecBase {
     base.unionByName(batch).write.mode("overwrite")
       .parquet(s"$ds/documents.parquet")
     TextOps.clearKeywordsCache()
-    TextOps.appendToKeywords(spark, ds, batch)
+    expect("keywords")(TextOps.appendToKeywords(spark, ds, batch))
     val incDir = Warehouse.latest("keywords", ds).get
     assert(incDir != prior, "append produced no new keywords version")
     assert(java.nio.file.Files.exists(
@@ -609,7 +627,7 @@ class IncrementalSpec extends SparkSpecBase {
     base.unionByName(batch).write.mode("overwrite")
       .parquet(s"$ds/documents.parquet")
     TextOps.clearFreqCache()
-    TextOps.appendToFreq(spark, ds, batch)
+    expect("freq")(TextOps.appendToFreq(spark, ds, batch))
     val incDir = Warehouse.latest("freq", ds).get
     assert(incDir != prior, "crossing append produced no new freq version")
     assert(java.nio.file.Files.exists(
@@ -640,14 +658,16 @@ class IncrementalSpec extends SparkSpecBase {
     TextOps.clearFreqCache()
     TextOps.buildFreq(spark, ds)
     val prior = Warehouse.latest("freq", ds).get
-    val batch = Seq((10L, "november zq oscar papa", "en", "srcF", 22L))
+    // two more 'zq' take its count from 2 to 4, crossing from class 2
+    // (bit length of 2) to class 3 — one crossed token
+    val batch = Seq((10L, "november zq oscar zq", "en", "srcF", 20L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     base.unionByName(batch).write.mode("overwrite")
       .parquet(s"$ds/documents.parquet")
     TextOps.clearFreqCache()
     // cap forced to zero: ANY crossing routes to the compaction rebuild
     sys.props("graft.freq.maxCrossed") = "0"
-    try TextOps.appendToFreq(spark, ds, batch)
+    try expect("freq", "rebuild", "crossed-cap")(TextOps.appendToFreq(spark, ds, batch))
     finally sys.props -= "graft.freq.maxCrossed"
     val incDir = Warehouse.latest("freq", ds).get
     assert(incDir != prior, "capped append produced no new freq version")
@@ -688,8 +708,8 @@ class IncrementalSpec extends SparkSpecBase {
     graft.ops.Export.clearGtiffCache()
     val batchRaw = graft.ops.Pixels.pixels(spark, ds)
       .filter(col("date") > lit(cutoff))
-    Pipeline.appendToCube(spark, ds, batchRaw)
-    graft.ops.Export.appendToGeoTiffFrames(spark, ds)
+    expect("cube")(Pipeline.appendToCube(spark, ds, batchRaw))
+    expect("gtiff")(graft.ops.Export.appendToGeoTiffFrames(spark, ds))
     val incDir = Warehouse.latest("gtiff", ds).get
     assert(incDir != prior, "append produced no new gtiff version")
     // the prior frame carried byte-identically (a file copy, no re-encode)
@@ -729,7 +749,7 @@ class IncrementalSpec extends SparkSpecBase {
     Pipeline.clearCubeCache()
     val batchRaw = graft.ops.Pixels.pixels(spark, ds)
       .filter(col("date") > lit(cutoff))
-    Pipeline.appendToCube(spark, ds, batchRaw)
+    expect("cube")(Pipeline.appendToCube(spark, ds, batchRaw))
     def snap() = Pipeline.cubeIndex(spark, ds)
       .select(col("date"), col("y"), col("x"),
         graft.ops.Num.r6(col("ndvi")).as("ndvi"),

@@ -20,6 +20,16 @@ class SoakSpec extends SparkSpecBase {
     Warehouse.partFileCount(java.nio.file.Paths.get(
       if (sub.isEmpty) dir else s"$dir/$sub"))
 
+  /** Every maintenance call since `before` took the incremental path,
+    * exactly `n` per family: a soak that silently rebuilds per batch
+    * would still pass its rebuild-equality locks. */
+  private def allIncremental(before: Map[Warehouse.Taken, Long], n: Int,
+      families: String*): Unit = {
+    val calls = MaintainSpec.since(before)
+    assert(calls == families.map(f => Warehouse.Taken(f, "incremental") -> n.toLong).toMap,
+      s"soak appends took: $calls")
+  }
+
   test("50-batch text-chain soak: append==rebuild, compaction bounds every table's file count") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -35,8 +45,11 @@ class SoakSpec extends SparkSpecBase {
       TextOps.clearTextDupCache()
       TextOps.clearFunnelCache()
       TextOps.clearFreqCache()
+      TextOps.clearKeywordsCache()
       TextOps.buildFunnel(spark, ds) // builds sig + textdup transitively
       TextOps.buildFreq(spark, ds)
+      TextOps.buildKeywords(spark, ds)
+      val census0 = Warehouse.appendCensus
       // stream rows reference a source doc: copy=true ships its exact
       // text (cross-batch exact-dup + banding pair), else a perturbed
       // unique text — every batch grows pairs/, verify/, hashes/,
@@ -58,6 +71,7 @@ class SoakSpec extends SparkSpecBase {
             TextOps.appendToTextDup(spark, ds, docs)
             TextOps.appendToFunnel(spark, ds, docs)
             TextOps.appendToFreq(spark, ds, docs)
+            TextOps.appendToKeywords(spark, ds, docs)
           }
           ()
         }
@@ -86,6 +100,8 @@ class SoakSpec extends SparkSpecBase {
       TextOps.appendToTextDup(spark, ds, extra)
       TextOps.appendToFunnel(spark, ds, extra)
       TextOps.appendToFreq(spark, ds, extra)
+      TextOps.appendToKeywords(spark, ds, extra)
+      allIncremental(census0, 51, "sig", "textdup", "funnel", "freq", "keywords")
       // --- file-count plateau after 51 batches. The bound is
       // size-floor (1 at these byte sizes) + budget + one batch's
       // files: the sync compaction trigger sits at floor + budget, and
@@ -96,6 +112,7 @@ class SoakSpec extends SparkSpecBase {
       val td = Warehouse.latest("textdup", ds).get
       val fn = Warehouse.latest("funnel", ds).get
       val fq = Warehouse.latest("freq", ds).get
+      val kw = Warehouse.latest("keywords", ds).get
       val counts = Seq(
         "sig" -> partsOf(sig),
         "textdup/pairs" -> partsOf(td, "pairs"),
@@ -105,7 +122,8 @@ class SoakSpec extends SparkSpecBase {
         "textdup/simhash" -> partsOf(td, "simhash"),
         "funnel/hashes" -> partsOf(fn, "hashes"),
         "freq/post" -> partsOf(fq, "post"),
-        "freq/scores" -> partsOf(fq, "scores"))
+        "freq/scores" -> partsOf(fq, "scores"),
+        "keywords/tf" -> partsOf(kw, "tf"))
       for ((name, n) <- counts)
         assert(n <= bound, s"$name carries $n part files after the soak (bound $bound)")
       // no append ever took a degraded fallback (epoch reads/carries
@@ -130,23 +148,27 @@ class SoakSpec extends SparkSpecBase {
         TextOps.dedupComponents(spark, ds).collect(),
         TextOps.funnelIndex(spark, ds).orderBy("stage", "doc_id").collect(),
         TextOps.freqBucket(spark, ds).collect(),
-        TextOps.nearPairs(spark, ds).orderBy("doc_a", "doc_b").collect())
-      val (p1, j1, c1, f1, b1, n1) = snap()
+        TextOps.nearPairs(spark, ds).orderBy("doc_a", "doc_b").collect(),
+        TextOps.docKeywords(spark, ds).collect())
+      val (p1, j1, c1, f1, b1, n1, k1) = snap()
       TextOps.clearSigCache()
       TextOps.clearTextDupCache()
       TextOps.clearFunnelCache()
       TextOps.clearFreqCache()
+      TextOps.clearKeywordsCache()
       Warehouse.invalidate("sig", ds)
       Warehouse.invalidate("textdup", ds)
       Warehouse.invalidate("funnel", ds)
       Warehouse.invalidate("freq", ds)
-      val (p2, j2, c2, f2, b2, n2) = snap()
+      Warehouse.invalidate("keywords", ds)
+      val (p2, j2, c2, f2, b2, n2, k2) = snap()
       assert(p1.sameElements(p2), "soaked pairs drifted from rebuild")
       assert(j1.sameElements(j2), "soaked verify drifted from rebuild")
       assert(c1.sameElements(c2), "soaked components drifted from rebuild")
       assert(f1.sameElements(f2), "soaked funnel drifted from rebuild")
       assert(b1.sameElements(b2), "soaked freq buckets drifted from rebuild")
       assert(n1.sameElements(n2), "soaked nearpairs drifted from rebuild")
+      assert(k1.sameElements(k2), "soaked keywords drifted from rebuild")
     } finally {
       prevBudget match {
         case Some(v) => sys.props("graft.compact.maxFiles") = v
@@ -171,6 +193,7 @@ class SoakSpec extends SparkSpecBase {
       base.write.parquet(s"$ds/embeddings.parquet")
       SimOps.clearNearDupCache()
       SimOps.buildNearDup(spark, ds)
+      val census0 = Warehouse.appendCensus
       for (i <- 0 until 30) {
         // one exact copy (a guaranteed cross-batch pair in the same
         // buckets) + one fresh vector per batch
@@ -183,6 +206,7 @@ class SoakSpec extends SparkSpecBase {
         batch.write.mode("append").parquet(s"$ds/embeddings.parquet")
         SimOps.appendToNearDup(spark, ds, batch)
       }
+      allIncremental(census0, 30, "neardup")
       val nd = Warehouse.latest("neardup", ds).get
       val counts = Seq(
         "neardup/members" -> partsOf(nd, "members"),
@@ -227,6 +251,7 @@ class SoakSpec extends SparkSpecBase {
       base.write.parquet(s"$ds/embeddings.parquet")
       SimOps.clearIvfCaches()
       SimOps.buildIvf(spark, ds)
+      val census0 = Warehouse.appendCensus
       // 30 tiny batches (60 vectors on 500 — inside the MaxIvfGrowth
       // contract, so the model stays frozen and every batch takes the
       // assignment-only append); each lands one file per touched cell
@@ -241,6 +266,7 @@ class SoakSpec extends SparkSpecBase {
         SimOps.clearIvfCaches()
         SimOps.appendToIvf(spark, ds, batch)
       }
+      allIncremental(census0, 30, "ivf")
       val ivf = Warehouse.latest("ivf", ds).get
       val cells = java.nio.file.Paths.get(ivf, "cells")
       val leafCounts = {
@@ -294,6 +320,7 @@ class SoakSpec extends SparkSpecBase {
       graft.ops.Pipeline.buildCube(spark, ds)
       graft.ops.Pipeline.buildGranuleCache(spark, ds)
       graft.ops.Export.buildGeoTiffFrames(spark, ds)
+      val census0 = Warehouse.appendCensus
       // 30 strictly-later monthly batches (the cube/cache append
       // contract: appended dates follow the prior corpus)
       val b0 = java.time.LocalDate.parse("1996-01-01")
@@ -313,6 +340,7 @@ class SoakSpec extends SparkSpecBase {
         graft.ops.Export.appendToGeoTiffFrames(spark, ds)
         prevS = nextS
       }
+      allIncremental(census0, 30, "cube", "gcache", "gtiff")
       // --- file-count plateau: floor (1 at these byte sizes) + budget
       val cube = Warehouse.latest("cube", ds).get
       val gc = Warehouse.latest("gcache", ds).get

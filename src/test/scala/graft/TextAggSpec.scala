@@ -415,14 +415,17 @@ class TextAggSpec extends SparkSpecBase {
         .createTempDirectory(s"graft-funnelarm-$label").toString
       corpus.write.mode("overwrite").parquet(s"$ds/documents.parquet")
       try {
-        val arms = Seq("on", "off").map { arm =>
-          sys.props("graft.funnel.pin") = arm
-          try {
-            TextOps.clearFunnelCache()
-            ops.Warehouse.invalidate("funnel", ds)
-            arm -> TextOps.funnelIndex(spark, ds)
-              .collect().map(_.toString).sorted.toSeq
-          } finally sys.props -= "graft.funnel.pin"
+        val arms = Seq(true, false).map { arm =>
+          val pins = scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
+          try arm -> TextOps.funnelStages(spark, ds, pin = { df =>
+              val (out, p) = ops.Checkpoints.pin(df)
+              pins += p
+              out
+            }, pinArm = Some(arm))
+            .flatMap { case (st, df) =>
+              df.select("doc_id").collect().map(r => s"$st,${r.getLong(0)}") }
+            .sorted
+          finally pins.foreach(ops.Checkpoints.release)
         }
         assert(arms(0)._2 == arms(1)._2,
           s"$label funnel arms drifted: pinned=${arms(0)._2.size} " +
