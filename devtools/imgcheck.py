@@ -1,8 +1,10 @@
 # Independent PNG + animated-GIF parsers written from the specs (NOT
 # ported from the Scala codecs - second implementations in a second
 # language): validate container structure, CRCs, palette, frame layout
-# and pixels against the deterministic payloads graft.ImgDump writes.
-#   java -cp target/scala-2.13/classes:/opt/spark/jars/'*' graft.ImgDump
+# and pixels against the deterministic payloads graft.ImgDump (test
+# sources) writes.
+#   sbt Test/compile
+#   java -cp 'target/scala-2.13/test-classes:target/scala-2.13/classes:/opt/spark/jars/*' graft.ImgDump
 #   python3 devtools/imgcheck.py
 import struct, zlib
 

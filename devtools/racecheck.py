@@ -17,7 +17,10 @@ appender's copy must fail, route through the appendTo* NonFatal
 fallback, and converge on the builder's artifact (fellback=1, same
 dir, no litter).
 
-Usage: racecheck.py [classes_dir]   (default target/scala-2.13/classes)
+Usage: racecheck.py [classpath]
+  (default target/scala-2.13/test-classes:target/scala-2.13/classes:
+  /opt/spark/jars/*; RaceProbe lives in the test sources, so run
+  `sbt Test/compile` first)
 Exit 0 = pass. Run from the repo root as part of the verify recipe.
 """
 import os
@@ -153,7 +156,7 @@ def run_append_round(classes: str) -> int:
 
 def main() -> int:
     classes = sys.argv[1] if len(sys.argv) > 1 \
-        else 'target/scala-2.13/classes:/opt/spark/jars/*'
+        else 'target/scala-2.13/test-classes:target/scala-2.13/classes:/opt/spark/jars/*'
     rc_build = 1
     for _ in range(3):
         rc_build = run_round(classes)

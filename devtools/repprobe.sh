@@ -27,7 +27,8 @@ mkdir -p "$WORK"
 # janino classes; the 240m default fills mid-run and silently disables the
 # JIT, degrading later stages 3-6x (measured on the sf1 build sequence).
 ADDOPENS="-XX:ReservedCodeCacheSize=512m --add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+# BuildTool lives in the test sources: run `sbt Test/compile` first
+CP="target/scala-2.13/test-classes:target/scala-2.13/classes:/opt/spark/jars/*"
 
 if [ ! -f "$CORPUS/documents.parquet" ]; then
   echo "== corpus: $SRC docs x $REPLICAS byte-identical replicas -> $CORPUS"

@@ -35,6 +35,9 @@ rm -rf "$CORPUS" "$OUT"
 # JIT, degrading later stages 3-6x (measured on the sf1 build sequence).
 ADDOPENS="-XX:ReservedCodeCacheSize=512m --add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
+# the developer mains (ScaleInvariants) live in the test sources: run
+# `sbt Test/compile` first
+TEST_CP="target/scala-2.13/test-classes:$CP"
 
 echo "== scalegen: $SRC -> $CORPUS (10x, stride 5000)"
 python3 devtools/scalegen.py "$SRC" "$CORPUS" 10 5000
@@ -56,7 +59,7 @@ python3 devtools/check.py "$CORPUS" "$OUT" | tee CORRECTNESS_SF1.txt
 echo "== ScaleInvariants at sf1"
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" java $ADDOPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx48g -cp "$CP" graft.ScaleInvariants "$CORPUS" \
+  -Xmx48g -cp "$TEST_CP" graft.ScaleInvariants "$CORPUS" \
   2>"$WORK/invariants.log" | tee -a CORRECTNESS_SF1.txt
 
 echo "== Bench at sf1 (rolling baseline: BENCH_SF1.json)"

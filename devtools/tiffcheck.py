@@ -2,8 +2,9 @@
 # the Scala codec - a second implementation in a second language):
 # validates container structure, strip layout, and all three
 # compression paths (none / LZW tag 5 / Deflate tag 8) against the
-# known pixel function. Companion of graft.TiffDump:
-#   java -cp target/scala-2.13/classes:/opt/spark/jars/* graft.TiffDump
+# known pixel function. Companion of graft.TiffDump (test sources):
+#   sbt Test/compile
+#   java -cp 'target/scala-2.13/test-classes:target/scala-2.13/classes:/opt/spark/jars/*' graft.TiffDump
 #   python3 devtools/tiffcheck.py
 # No raster library exists in this sandbox, so this is the closest
 # available stand-in for a GDAL read-back check of the GeoTIFF sink.

@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * cold-reset (in-JVM memo clears + the warehouse keys to invalidate).
   *
   * ONE registry feeds every measurement surface — [[Bench]]'s build
-  * timings and settle re-runs, and the [[BuildTool]] operational CLI —
+  * timings and settle re-runs, the perfbench maintain workload, and the
+  * `BuildTool` and `ScaleProbe` developer mains in the test sources —
   * so a new family, or an extra invalidation key like ivf's paired
   * `kmeans` model, is spelled exactly once. A second hand-maintained
   * copy is how a `-cold` flag silently measures a warm build.

@@ -53,7 +53,7 @@ object TextOps {
       .filter(col("n_members") > cap)
 
   /** Word tokens (single-space separated corpus). */
-  private def toks = split(col("text"), " ")
+  private[graft] def toks = split(col("text"), " ")
 
   /** `size(toks)` without materializing the token array: splitting on a
     * single literal space always yields (number of spaces) + 1 parts, so
@@ -1367,19 +1367,6 @@ object TextOps {
             pinned = true)).as("simhash"))
       .filter(col("simhash").isNotNull)
 
-  /** The r15 explode/aggregate spelling of [[simhashDoc]] — the
-    * independent lineage TextAggSpec checks the native pass against. */
-  private[graft] def simhashDocRelational(doc: DataFrame): DataFrame = {
-    val highHex = Seq("8", "9", "a", "b", "c", "d", "e", "f")
-    val bits = (0 until 16).map { j =>
-      when(sum(when(substring(col("h"), j + 1, 1).isin(highHex: _*), 1)
-        .otherwise(-1)) > 0, 1 << j).otherwise(0)
-    }.reduce(_ + _)
-    doc.select(col("doc_id"), explode(toks).as("tok"))
-      .withColumn("h", md5(col("tok").cast("binary")))
-      .groupBy("doc_id").agg(bits.as("simhash"))
-  }
-
   /** Equal-simhash buckets with >1 doc are near-dup candidates. Serves
     * from the [[textDupIndex]] per-doc table — the last text query that
     * re-scanned the corpus per run before r10; the serve path is one
@@ -1429,7 +1416,7 @@ object TextOps {
     * times (per-doc sizes + both sides of the intersection join), and
     * without a pin each consumer re-runs the semi-join + shingle explode
     * + distinct exchange. */
-  private def candShingles(doc: DataFrame, cand: DataFrame): DataFrame = {
+  private[graft] def candShingles(doc: DataFrame, cand: DataFrame): DataFrame = {
     val candDocs = cand.select(col("doc_a").as("doc_id"))
       .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
     // prune the DOCUMENTS to candidate members BEFORE shingling: the
@@ -1517,13 +1504,7 @@ object TextOps {
   private[graft] def nearPairs(s: SparkSession, d: String): DataFrame =
     Io.parquet(s, s"${textDupIndex(s, d)}/nearpairs")
 
-  /** Test hook: the pre-fast-path verify form — EVERY candidate pair
-    * pays the shingle intersection. The equivalence reference the fast
-    * path is spec-checked against. */
-  private[graft] def jaccardVerifySlow(doc: DataFrame, cand: DataFrame): DataFrame =
-    jaccardOfShingles(cand, candShingles(doc, cand))
-
-  private def jaccardOfShingles(cand: DataFrame, sh: DataFrame): DataFrame = {
+  private[graft] def jaccardOfShingles(cand: DataFrame, sh: DataFrame): DataFrame = {
     // Pack each candidate doc's distinct shingle set into ONE row, then
     // intersect IN-ROW per pair: |∩| = size(array_intersect) over the
     // distinct sets — integer-identical to the exploded
@@ -2320,25 +2301,6 @@ object TextOps {
       (col("rs.n_tri") - col("rs.n_tri_d")).cast("double") / col("rs.n_tri")
     val topFrac = col("rs.top_big").cast("double") / col("rs.n_big")
     st.select(col("doc_id"), r6(dupFrac).as("dup_trigram_frac"),
-        r6(topFrac).as("top_bigram_frac"),
-        (dupFrac > DupTrigramMax || topFrac > TopBigramMax).as("repetitive"))
-      .orderBy("doc_id")
-  }
-
-  /** The r15 explode/aggregate spelling of [[repetitionStats]] — kept as
-    * the independent lineage TextAggSpec checks the native census
-    * against (the inv_v16 pattern: two spellings, one truth). */
-  private[graft] def repetitionStatsRelational(doc: DataFrame): DataFrame = {
-    val tri = ngrams(doc, 3).groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tri"), countDistinct("s").as("n_tri_d"))
-    val big = ngrams(doc, 2).groupBy("doc_id", "s")
-      .agg(count(lit(1)).as("n"))
-      .groupBy("doc_id")
-      .agg(sum("n").as("n_big"), max("n").as("top_big"))
-    val dupFrac = (col("n_tri") - col("n_tri_d")).cast("double") / col("n_tri")
-    val topFrac = col("top_big").cast("double") / col("n_big")
-    tri.join(big, "doc_id")
-      .select(col("doc_id"), r6(dupFrac).as("dup_trigram_frac"),
         r6(topFrac).as("top_bigram_frac"),
         (dupFrac > DupTrigramMax || topFrac > TopBigramMax).as("repetitive"))
       .orderBy("doc_id")

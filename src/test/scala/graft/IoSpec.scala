@@ -119,10 +119,8 @@ class IoSpec extends SparkSpecBase {
   }
 
   test("src/main spells a parquet read only through Io.parquet") {
-    val main = Paths.get("src/main")
-    assert(Files.isDirectory(main), s"run from the repo root (cwd ${Paths.get("").toAbsolutePath})")
     val spelling = "\\.read\\.parquet\\(".r
-    val files = Files.walk(main).iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    val files = IoSpec.mainSources()
     val helper = files.filter(_.getFileName.toString == "Io.scala")
     assert(helper.size == 1 && spelling.findFirstIn(Files.readString(helper.head)).isDefined,
       "the helper itself must hold the one spelling")
@@ -184,5 +182,15 @@ class IoSpec extends SparkSpecBase {
     assert(nioKinds == stockKinds, s"$nioKinds vs $stockKinds")
     assert(nioFiles == Set("rw-r--r--") && nioDirs == Set("rwxr-xr-x"), s"$nioFiles $nioDirs")
     assert(stockFiles == nioFiles && stockDirs == nioDirs, s"stock: $stockFiles $stockDirs")
+  }
+}
+
+object IoSpec {
+  /** Every Scala source under `src/main`: the file set the source lints
+    * walk. */
+  def mainSources(): List[Path] = {
+    val main = Paths.get("src/main")
+    require(Files.isDirectory(main), s"run from the repo root (cwd ${Paths.get("").toAbsolutePath})")
+    Files.walk(main).iterator().asScala.filter(_.toString.endsWith(".scala")).toList
   }
 }

@@ -7,18 +7,10 @@ package graft
 class ScaleInvariantsSpec extends SparkSpecBase {
 
   test("every scale invariant holds at sf0.001") {
-    val results = scala.collection.mutable.LinkedHashMap[String, (Boolean, String)]()
-    val collect = new ScaleInvariants.Check {
-      def apply(name: String)(f: => (Boolean, String)): Unit = {
-        results(name) =
-          try f
-          catch { case e: Throwable => (false, e.toString.take(200)) }
-        spark.catalog.clearCache()
-      }
-    }
+    val collect = new ScaleInvariants.Collector(spark)
     ScaleInvariants.runChecks(spark, "/root/testdata/sf0.001", collect)
-    assert(results.size >= 12, s"expected >=12 checks, got ${results.keys}")
-    val failed = results.collect { case (n, (ok, d)) if !ok => s"$n: $d" }
-    assert(failed.isEmpty, failed.mkString("; "))
+    assert(collect.results.size >= 12,
+      s"expected >=12 checks, got ${collect.results.map(_._1)}")
+    assert(collect.fails.isEmpty, collect.fails.mkString("; "))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{SimOps, Skew, TextOps}
+import graft.ops.{SimOps, TextOps}
 
 /** Declared per-task spread bounds for the window-heavy serves'
   * exchanges (r15 verdict #8): no task may absorb more than HALF of

@@ -1,14 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.MinHashAgg
 import graft.ops.TextOps
+import graft.ops.Num.r6
 
 /** The one-pass MinHash Aggregator produces bit-identical signatures to
   * the 8-aggregate SQL form (same md5 windows, same minima) — across
   * partitionings, which exercises merge(). */
 class TextAggSpec extends SparkSpecBase {
   import spark.implicits._
+  import TextAggSpec._
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -55,7 +58,7 @@ class TextAggSpec extends SparkSpecBase {
     val doc = Tables.documents(spark, sf).select("doc_id", "text")
       .unionByName(extra)
     val a = TextOps.repetitionStats(doc).collect().toSeq
-    val b = TextOps.repetitionStatsRelational(doc).collect().toSeq
+    val b = repetitionStatsRelational(doc).collect().toSeq
     assert(a == b, s"repetition spellings diverge:\n native=${a.take(5)}\n rel=${b.take(5)}")
     assert(a.exists(_.getLong(0) >= 9001L))
   }
@@ -69,7 +72,7 @@ class TextAggSpec extends SparkSpecBase {
     val doc = Tables.documents(spark, sf).select("doc_id", "text")
       .unionByName(extra)
     val a = TextOps.simhashDoc(doc).orderBy("doc_id").collect().toSeq
-    val b = TextOps.simhashDocRelational(doc).orderBy("doc_id").collect().toSeq
+    val b = simhashDocRelational(doc).orderBy("doc_id").collect().toSeq
     assert(a == b, s"simhash spellings diverge:\n native=${a.take(5)}\n rel=${b.take(5)}")
   }
 
@@ -227,7 +230,7 @@ class TextAggSpec extends SparkSpecBase {
       (1L, 7L), (3L, 7L)).toDF("doc_a", "doc_b")
     val fast = TextOps.jaccardVerifyTable(doc, cand)
       .as[(Long, Long, Double)].collect().toSet
-    val slow = TextOps.jaccardVerifySlow(doc, cand)
+    val slow = jaccardVerifySlow(doc, cand)
       .as[(Long, Long, Double)].collect().toSet
     assert(fast == slow, s"fast=$fast slow=$slow")
     val m = fast.map(r => (r._1, r._2) -> r._3).toMap
@@ -727,5 +730,47 @@ class TextAggSpec extends SparkSpecBase {
     val nulls = Seq[Option[Long]](None).toDF("n")
       .select(TextOps.chunkTokTotal("n")).collect()
     assert(nulls.head.isNullAt(0), "closed form must be NULL on NULL n")
+  }
+}
+
+/** The reference spellings the native and fast-path operators are
+  * checked against: independent lineages of the same result, kept out
+  * of the engine because nothing but these equality tests runs them. */
+object TextAggSpec {
+
+  /** The r15 explode/aggregate spelling of [[TextOps.simhashDoc]]. */
+  def simhashDocRelational(doc: DataFrame): DataFrame = {
+    val highHex = Seq("8", "9", "a", "b", "c", "d", "e", "f")
+    val bits = (0 until 16).map { j =>
+      when(sum(when(substring(col("h"), j + 1, 1).isin(highHex: _*), 1)
+        .otherwise(-1)) > 0, 1 << j).otherwise(0)
+    }.reduce(_ + _)
+    doc.select(col("doc_id"), explode(TextOps.toks).as("tok"))
+      .withColumn("h", md5(col("tok").cast("binary")))
+      .groupBy("doc_id").agg(bits.as("simhash"))
+  }
+
+  /** The pre-fast-path verify form of [[TextOps.jaccardVerifyTable]]:
+    * EVERY candidate pair pays the shingle intersection. */
+  def jaccardVerifySlow(doc: DataFrame, cand: DataFrame): DataFrame =
+    TextOps.jaccardOfShingles(cand, TextOps.candShingles(doc, cand))
+
+  /** The r15 explode/aggregate spelling of [[TextOps.repetitionStats]]
+    * (the inv_v16 pattern: two spellings, one truth). */
+  def repetitionStatsRelational(doc: DataFrame): DataFrame = {
+    val tri = TextOps.ngrams(doc, 3).groupBy("doc_id")
+      .agg(count(lit(1)).as("n_tri"), countDistinct("s").as("n_tri_d"))
+    val big = TextOps.ngrams(doc, 2).groupBy("doc_id", "s")
+      .agg(count(lit(1)).as("n"))
+      .groupBy("doc_id")
+      .agg(sum("n").as("n_big"), max("n").as("top_big"))
+    val dupFrac = (col("n_tri") - col("n_tri_d")).cast("double") / col("n_tri")
+    val topFrac = col("top_big").cast("double") / col("n_big")
+    tri.join(big, "doc_id")
+      .select(col("doc_id"), r6(dupFrac).as("dup_trigram_frac"),
+        r6(topFrac).as("top_bigram_frac"),
+        (dupFrac > TextOps.DupTrigramMax || topFrac > TextOps.TopBigramMax)
+          .as("repetitive"))
+      .orderBy("doc_id")
   }
 }

@@ -32,17 +32,13 @@ object ScaleInvariants {
     * sample-sized at any corpus. */
   val SamplePairs = 256
 
-  /** Per-check sink: name + thunk returning (ok, detail). A thrown
+  /** Per-check sink: runs a name + thunk returning (ok, detail),
+    * records the outcome and prints a check.py-style line. A thrown
     * check is a FAIL with the exception as detail, never an abort of
     * the remaining checks. */
-  private[graft] trait Check {
-    def apply(name: String)(f: => (Boolean, String)): Unit
-  }
-
-  /** Collecting [[Check]]: runs every check, records failures, prints
-    * check.py-style lines. */
-  private[graft] final class Collector(spark: SparkSession) extends Check {
-    var fails: List[String] = Nil
+  private[graft] final class Collector(spark: SparkSession) {
+    var results = Vector.empty[(String, Boolean, String)]
+    def fails: Seq[String] = results.collect { case (n, false, d) => s"$n: $d" }
     def apply(name: String)(f: => (Boolean, String)): Unit = {
       val (ok, detail) =
         try f
@@ -50,7 +46,7 @@ object ScaleInvariants {
           (false, s"threw ${e.getClass.getSimpleName}: " +
             Option(e.getMessage).getOrElse("").replaceAll("\\s+", " ").take(160))
         }
-      if (!ok) fails ::= name
+      results :+= ((name, ok, detail))
       println(f"$name%-28s ${if (ok) "OK  " else "FAIL"} $detail")
       spark.catalog.clearCache()
     }
@@ -69,10 +65,10 @@ object ScaleInvariants {
     if (fails > 0) sys.exit(1)
   }
 
-  /** The checks themselves, callback-driven so a spec can run them
+  /** The checks themselves, apart from `main` so a spec can run them
     * in-process against sf0.001 and assert zero failures. */
   private[graft] def runChecks(spark: SparkSession, dir: String,
-      check: Check): Unit = {
+      check: Collector): Unit = {
     val docs = Tables.documents(spark, dir)
     val emb = Tables.embeddings(spark, dir)
 

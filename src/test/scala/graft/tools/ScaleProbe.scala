@@ -12,11 +12,12 @@ import graft.io.Io
   *
   * Usage: `java ... graft.ScaleProbe <datasetDir> [appends-only[:text|:vec]]`
   * → one JSON line of seconds per step, builds forced cold (warehouse
-  * invalidated first). `appends-only` skips the primary-dir build and
-  * query timings and probes just the append paths (the copy-side builds
-  * still run — appends need prior artifacts); the `:text` / `:vec`
-  * suffix restricts to the document chain (sig → textdup → funnel →
-  * freq) or the vector chain (neardup, ivf), halving the copy-build
+  * invalidated first; `BuildTool <dir> -cold <family>` re-times one
+  * build alone). `appends-only` skips the primary-dir build and query
+  * timings and probes just the append paths (the copy-side builds still
+  * run — appends need prior artifacts); the `:text` / `:vec` suffix
+  * restricts to the document chain (sig → textdup → funnel → freq →
+  * keywords) or the vector chain (neardup, ivf), halving the copy-build
   * cost when iterating on one side.
   */
 object ScaleProbe {
@@ -26,42 +27,12 @@ object ScaleProbe {
     val appendsOnly = mode.startsWith("appends-only")
     val chain = mode.split(':').lift(1).getOrElse("all")
     val spark = Sessions.local()
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
     def contractLine(head: Seq[(String, String)],
         steps: Seq[(String, Double)]): String =
       (head.map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" } ++
         steps.map { case (k, v) =>
           s"${Json.str(k)}:${math.rint(v * 1000) / 1000}" })
         .mkString("{", ",", "}")
-    // `build:<step>` re-times ONE cold build in isolation (iterating on
-    // a single build's plan at 100x should not cost the whole probe)
-    val builders: Map[String, () => Unit] = Map(
-      "sig" -> (() => ops.TextOps.buildSigIndex(spark, dir)),
-      "textdup" -> (() => ops.TextOps.buildTextDup(spark, dir)),
-      "freq" -> (() => ops.TextOps.buildFreq(spark, dir)),
-      "keywords" -> (() => ops.TextOps.buildKeywords(spark, dir)),
-      "neardup" -> (() => ops.SimOps.buildNearDup(spark, dir)),
-      "funnel" -> (() => ops.TextOps.buildFunnel(spark, dir)),
-      "ivf" -> (() => ops.SimOps.buildIvf(spark, dir)))
-    if (mode.startsWith("build:")) {
-      val step = mode.stripPrefix("build:")
-      val b = builders.getOrElse(step,
-        sys.error(s"unknown build step '$step' (${builders.keys.mkString(",")})"))
-      // invalidate only this build's artifact (plus kmeans, which ivf
-      // and neardup would otherwise reuse) — the rest of the dataset's
-      // warehouse stays, so a 100x textdup artifact survives an ivf
-      // re-time
-      ops.Warehouse.invalidate(step, dir)
-      if (step == "ivf" || step == "neardup") ops.Warehouse.invalidate("kmeans", dir)
-      println(contractLine(Seq("dir" -> dir, "mode" -> mode),
-        Seq(s"${step}_build" -> timed(b()))))
-      spark.stop()
-      return
-    }
     // `ivfk:<k>` prices the quantizer-geometry knob at scale: cold-build
     // the k-variant index + model, then time its probe-1 serve next to
     // the oracle-pinned k=8 serve on the same corpus (the declared v05
@@ -87,7 +58,7 @@ object ScaleProbe {
     // 90% of the documents and one term appears in EVERY document, the
     // two hot keys a web crawl actually produces (one dominant domain,
     // stopwords). Each step reports the max shuffle-read rows any task
-    // absorbed ([[ops.Skew]]) — the straggler number. Reading the
+    // absorbed ([[Skew]]) — the straggler number. Reading the
     // numbers: per-source/lang censuses partial-aggregate (hot key
     // cost = one row per partition), t23's hot-term rows co-locate in
     // ONE task of the df shuffle-hash JOIN at this corpus size (below
@@ -107,7 +78,7 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
       def sk(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
           org.apache.spark.sql.DataFrame): (String, Double) = {
-        val m = ops.Skew.maxTaskShuffleRows(spark) { fn(spark, tmp).count(); () }
+        val m = Skew.maxTaskShuffleRows(spark) { fn(spark, tmp).count(); () }
         spark.catalog.clearCache()
         name -> m.toDouble
       }
@@ -135,14 +106,8 @@ object ScaleProbe {
       return
     }
     ops.Warehouse.invalidateDataset(dir)
-    val builds = Seq(
-      "sig_build" -> timed(ops.TextOps.buildSigIndex(spark, dir)),
-      "textdup_build" -> timed(ops.TextOps.buildTextDup(spark, dir)),
-      "freq_build" -> timed(ops.TextOps.buildFreq(spark, dir)),
-      "keywords_build" -> timed(ops.TextOps.buildKeywords(spark, dir)),
-      "neardup_build" -> timed(ops.SimOps.buildNearDup(spark, dir)),
-      "funnel_build" -> timed(ops.TextOps.buildFunnel(spark, dir)),
-      "ivf_build" -> timed(ops.SimOps.buildIvf(spark, dir)))
+    val builds = replicaFamilies(TextChain ++ VecChain)
+      .map(f => f.field -> timed(f.build(spark, dir)))
     def q(fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {
       val t = timed { fn(spark, dir).count(); () }
@@ -173,18 +138,33 @@ object ScaleProbe {
     // re-introduced key-partitioned window) jumps this number at scale
     // before it is a wall-time mystery
     val skew = Seq(
-      "t23_max_task_shuffle_rows" -> ops.Skew.maxTaskShuffleRows(spark) {
+      "t23_max_task_shuffle_rows" -> Skew.maxTaskShuffleRows(spark) {
         ops.TextOps.docKeywords(spark, dir).count(); () }.toDouble,
-      "v16_max_task_shuffle_rows" -> ops.Skew.maxTaskShuffleRows(spark) {
+      "v16_max_task_shuffle_rows" -> Skew.maxTaskShuffleRows(spark) {
         ops.SimOps.adcTopk(spark, dir).count(); () }.toDouble,
       // t26's single-task mass must be the (source, u16) census — bounded
       // at nsrc·2^16 regardless of corpus size — never the corpus itself
-      "t26_max_task_shuffle_rows" -> ops.Skew.maxTaskShuffleRows(spark) {
+      "t26_max_task_shuffle_rows" -> Skew.maxTaskShuffleRows(spark) {
         ops.TextOps.quotaSample(spark, dir).count(); () }.toDouble)
     val appends = probeAppends(spark, dir)
     println(contractLine(Seq("dir" -> dir), builds ++ queries ++ skew ++ appends))
     spark.stop()
   }
+
+  private def timed(f: => Unit): Double = {
+    val t0 = System.nanoTime()
+    f
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** The families a replica dataset can build. It carries only the
+    * documents and embeddings tables, so cube, gcache and gtiff are out.
+    * Each chain is in dependency order. */
+  private val TextChain = Seq("sig", "textdup", "funnel", "freq", "keywords")
+  private val VecChain = Seq("neardup", "ivf")
+
+  private def replicaFamilies(names: Seq[String]): Seq[Families.Family] =
+    names.map(n => Families.byName(n).getOrElse(sys.error(s"unknown family '$n'")))
 
   private def probeAppends(spark: org.apache.spark.sql.SparkSession,
       dir: String, chain: String = "all"): Seq[(String, Double)] = {
@@ -193,11 +173,6 @@ object ScaleProbe {
     ops.Prof.resetDegraded()
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
     val tmpDs = java.nio.file.Files.createTempDirectory("graft-probe-ds").toString
     for (t <- Seq("documents.parquet", "embeddings.parquet")) {
       // the copy is always a DIRECTORY of part files (appends land as
@@ -222,17 +197,8 @@ object ScaleProbe {
     }
     // cold artifact builds on the copy (untimed here — the build costs
     // are measured above on the primary dir)
-    if (text) {
-      ops.TextOps.buildSigIndex(spark, tmpDs)
-      ops.TextOps.buildTextDup(spark, tmpDs)
-      ops.TextOps.buildFunnel(spark, tmpDs)
-      ops.TextOps.buildFreq(spark, tmpDs)
-      ops.TextOps.buildKeywords(spark, tmpDs)
-    }
-    if (vec) {
-      ops.SimOps.buildNearDup(spark, tmpDs)
-      ops.SimOps.buildIvf(spark, tmpDs)
-    }
+    replicaFamilies((if (text) TextChain else Nil) ++ (if (vec) VecChain else Nil))
+      .foreach(_.build(spark, tmpDs))
     // fixed-size batches: 200 docs (half exact copies, half perturbed),
     // 40 vectors (small enough that bandBits stays put at the 1x corpus
     // — a geometry flip would measure a full rebuild, not an append)

@@ -1,4 +1,4 @@
-package graft.ops
+package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
